@@ -11,13 +11,17 @@ Spark-first design:
   executor-side and only the final (kilobyte-to-megabyte) filter reaches
   the driver. This is exactly the 100 TB-safe shape: data never moves, the
   sketch does. PySpark exposes no Python wrapper, so we bridge via py4j.
-- **probe** — the serialized filter is broadcast and checked row-by-row
-  inside a vectorized pandas UDF using a numpy reimplementation of Spark's
-  Murmur3 (functions/hashing.py). Hashing of non-long columns happens
-  JVM-side first (``xxhash64``), so Python only does bit lookups.
+- **probe** — Catalyst's own ``BloomFilterMightContain`` expression, the
+  class Spark's runtime join filters use, with the serialized filter as a
+  binary literal. The filter was written by the JVM's ``BloomFilterImpl``
+  and is read back by the same class, so probe answers match the build by
+  construction. The probe runs in whole-stage codegen on every task slot;
+  no Python worker and no Arrow round trip is involved.
 
 Non-long columns are normalized with ``xxhash64`` before both build and
-probe, keeping the Murmur3 surface long-only (a single, testable codepath).
+probe, so both sides only ever see BIGINT keys (one shared contract,
+``hashing.as_long_key``). ``BloomFilterSketch`` parses the same bytes on
+the driver for set algebra (union/intersect) and driver-side checks.
 """
 
 from __future__ import annotations
@@ -26,9 +30,11 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, LongType
+from pyspark.sql.types import BooleanType
 
 from bloom_filters_count_min_sketch_spark_streaming_spark.functions.hashing import (
     as_long_key as _as_long,
@@ -352,15 +358,16 @@ def bloom_build(df: DataFrame, col: str, expected_items: int, fpp: float) -> byt
     """Build a Bloom filter over ``df[col]`` distributively; return its bytes.
 
     JVM path: Dataset.stat.bloomFilter → treeAggregate of the bit array.
+    Zero non-null rows give an empty filter (matches nothing); every other
+    failure propagates.
     """
     jdf = df.select(_as_long(df, col).alias(col)).where(F.col(col).isNotNull())._jdf  # noqa: SLF001
-    spark = df.sparkSession
-    jvm = spark._jvm  # noqa: SLF001
+    jvm = df.sparkSession._jvm  # noqa: SLF001
     try:
         jbloom = jdf.stat().bloomFilter(col, int(expected_items), float(fpp))
-    except Exception:  # noqa: BLE001 — JVM aggregate NPEs on zero rows
-        # Zero non-null rows: an empty filter (matches nothing) is the
-        # correct degenerate result.
+    except Py4JJavaError as exc:
+        if not _is_zero_row_failure(exc):
+            raise
         jbloom = jvm.org.apache.spark.util.sketch.BloomFilter.create(
             int(expected_items), float(fpp)
         )
@@ -369,24 +376,53 @@ def bloom_build(df: DataFrame, col: str, expected_items: int, fpp: float) -> byt
     return bytes(bos.toByteArray())
 
 
+def _is_zero_row_failure(exc: Py4JJavaError) -> bool:
+    """True for the one failure ``stat().bloomFilter`` raises on zero rows:
+    the aggregate yields NULL and ``BloomFilter.readFrom`` dereferences it
+    (an NPE whose trace runs through that method). A cancelled job, an OOM
+    or a failing input expression raises something else."""
+    jexc = exc.java_exception
+    if jexc.getClass().getName() != "java.lang.NullPointerException":
+        return False
+    return any(
+        frame.getClassName() == "org.apache.spark.util.sketch.BloomFilter"
+        and frame.getMethodName() == "readFrom"
+        for frame in jexc.getStackTrace()
+    )
+
+
+def _might_contain_column(spark, bloom_bytes: bytes, key: Column) -> Column:
+    """Column for Catalyst's ``BloomFilterMightContain(Literal(bytes), key)``.
+
+    The expression is internal Catalyst API, absent from the SQL function
+    registry, so it is reached through py4j. If a Spark build lacks it this
+    fails loudly instead of probing some other way."""
+    jvm = spark._jvm  # noqa: SLF001
+    expr_cls = jvm.org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    utils = jvm.org.apache.spark.sql.classic.ExpressionUtils
+    if not (isinstance(expr_cls, JavaClass) and isinstance(utils, JavaClass)):
+        raise RuntimeError(
+            "this Spark build lacks org.apache.spark.sql.catalyst.expressions."
+            "BloomFilterMightContain or org.apache.spark.sql.classic.ExpressionUtils; "
+            "bloom_might_contain needs both (Spark 4.x classic)"
+        )
+    literal = jvm.org.apache.spark.sql.catalyst.expressions.Literal.create(
+        bytearray(bloom_bytes), jvm.org.apache.spark.sql.types.DataTypes.BinaryType
+    )
+    return Column(utils.column(expr_cls(literal, utils.expression(key._jc))))  # noqa: SLF001
+
+
 def bloom_might_contain(df: DataFrame, col: str, bloom_bytes: bytes, out: str = "might_contain") -> DataFrame:
     """Add boolean ``out`` column: approximate membership of ``col``.
 
-    The filter is shipped to executors via closure capture of the parsed
-    sketch (broadcast by Spark's task serializer); per-row work is numpy.
+    ``bloom_bytes`` (from ``bloom_build`` or ``BloomFilterSketch.to_bytes``)
+    is embedded in the plan as a binary literal and probed by Catalyst's
+    ``BloomFilterMightContain`` in generated JVM code, so the answers are
+    exactly ``BloomFilter.mightContainLong`` of the key. NULL in -> NULL
+    out. Works on batch and streaming DataFrames alike.
     """
-    sketch = BloomFilterSketch.from_bytes(bloom_bytes)
-
-    @F.pandas_udf(BooleanType())
-    def _probe(keys: pd.Series) -> pd.Series:
-        mask = keys.isna().to_numpy()
-        values = keys.to_numpy(dtype=np.int64, na_value=0)
-        result = pd.Series(sketch.might_contain_longs(values), dtype="object")
-        # NULL in -> NULL out (same as Spark's might_contain semantics)
-        result[mask] = None
-        return result
-
-    return df.withColumn(out, _probe(_as_long(df, col)))
+    probe = _might_contain_column(df.sparkSession, bloom_bytes, _as_long(df, col))
+    return df.withColumn(out, probe)
 
 
 def bloom_prefilter_join(

@@ -1,14 +1,12 @@
 """Vectorized (numpy) reimplementation of Spark's Murmur3_x86_32.hashLong.
 
 Why this exists: Spark's ``org.apache.spark.util.sketch.BloomFilter`` hashes
-items with Murmur3_x86_32 on the JVM. Executors' Python workers have no py4j
-bridge, so a distributed membership probe (one boolean per row, billions of
-rows) needs the same hash *in Python*. This module computes it with numpy
-uint32 arithmetic — Arrow-batched, no per-row Python.
-
-The reference engine's Bloom filter plays the same role (approximate
-set-membership over a stream); we reuse Spark's own sketch implementation
-for the *build* (JVM treeAggregate) and this for the *probe*.
+items with Murmur3_x86_32 on the JVM. Executor probes no longer need it:
+``bloom_might_contain`` runs Catalyst's ``BloomFilterMightContain`` on the
+JVM. This port serves the driver side, where ``BloomFilterSketch`` answers
+membership for filters it has merged or intersected in numpy (checks in
+the sketch queries) without a py4j round trip per key, and the parity tests
+that pin those answers to the JVM's.
 
 Matches byte-for-byte with the JVM implementation (see
 tests/test_bloom.py::test_murmur3_matches_jvm).

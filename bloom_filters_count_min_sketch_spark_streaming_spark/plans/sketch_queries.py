@@ -131,7 +131,8 @@ def cms_event_type_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom filter membership: build over orders.o_custkey (JVM
-    treeAggregate), probe a key range executor-side (numpy Murmur3).
+    treeAggregate), probe a key range executor-side (Catalyst's
+    BloomFilterMightContain).
     fpp=1e-9 -> expected false positives over 3000 probes ~ 3e-6 ~ 0,
     so the exact IN-subquery is a valid oracle; the approximate regime is
     covered by property tests."""

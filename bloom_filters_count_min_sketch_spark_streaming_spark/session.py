@@ -13,6 +13,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """24g, capped at three quarters of physical RAM so the driver heap
+    (which holds the local executors too) cannot outgrow the host."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, ram_mb * 3 // 4)}m"
+
+
 def get_spark(app_name: str = "bfcms-engine") -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 
@@ -21,7 +28,7 @@ def get_spark(app_name: str = "bfcms-engine") -> SparkSession:
     should be ~2-3x total cores; AQE coalesces them back down at runtime, so
     oversizing is safe while undersizing causes spill.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
@@ -29,14 +36,14 @@ def get_spark(app_name: str = "bfcms-engine") -> SparkSession:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Shuffle sizing for local[32]; AQE coalesces small stages.
+        # One shuffle partition per local core; AQE coalesces small stages.
         .config("spark.sql.shuffle.partitions", cpus)
         # Arrow for every JVM<->Python columnar hop (toPandas, pandas_udf).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Deterministic timestamp rendering regardless of host TZ.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
     )
     return builder.getOrCreate()
 

@@ -1,9 +1,12 @@
 """Bloom filter property tests (SURVEY §5.2.3): zero false negatives,
-bounded false-positive rate, JVM bit-parity of the numpy probe."""
+bounded false-positive rate, JVM bit-parity of the numpy probe, and parity
+of the Catalyst probe with the driver-side sketch."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from bloom_filters_count_min_sketch_spark_streaming_spark.functions.bloom import (
@@ -206,3 +209,67 @@ def test_counting_bloom_distributed_build_matches_local(spark):
     local.add_longs(np.array([i % 250 for i in range(400)], dtype=np.int64))
     local.delete_longs(np.array([i % 50 for i in range(100)], dtype=np.int64))
     assert np.array_equal(dist.counters, local.counters)
+
+
+def _probe_longs(spark, keys: np.ndarray, bloom_bytes: bytes) -> np.ndarray:
+    df = spark.createDataFrame(pd.DataFrame({"k": keys}))
+    rows = bloom_might_contain(df, "k", bloom_bytes).toPandas()
+    got = dict(zip(rows["k"].to_numpy(), rows["might_contain"].to_numpy(dtype=bool)))
+    return np.array([got[k] for k in keys])
+
+
+def test_catalyst_probe_matches_sketch_on_edge_and_random_longs(spark):
+    edge = np.array(
+        [0, 1, -1, 2, -2, 2**32, -(2**32), 2**32 - 1, 2**31, -(2**31), 2**63 - 1, -(2**63)],
+        dtype=np.int64,
+    )
+    rng = np.random.default_rng(11)
+
+    def random_longs(n: int) -> np.ndarray:
+        return rng.integers(-(2**63), 2**63 - 1, n, dtype=np.int64)
+
+    inserted = np.concatenate([edge[::2], random_longs(20_000)])
+    probe = np.unique(np.concatenate([edge, inserted[:5_000], random_longs(60_000)]))
+    # a loose filter (fpp 0.2) so the non-inserted half has many positives
+    # and a wrong bit index would show as a mismatch on both sides
+    bb = bloom_build(spark.createDataFrame(pd.DataFrame({"k": inserted})), "k", len(inserted), 0.2)
+    expected = BloomFilterSketch.from_bytes(bb).might_contain_longs(probe)
+    got = _probe_longs(spark, probe, bb)
+    assert 0.05 < expected.mean() < 0.95
+    assert np.array_equal(got, expected), f"{int((got != expected).sum())} mismatching rows"
+
+
+def test_catalyst_probe_null_long_key_is_null(spark):
+    # string keys: tests/test_advice_fixes.py::test_bloom_null_string_key_probe_is_null
+    longs = spark.createDataFrame([(1,), (None,), (5,)], "k bigint")
+    bb = bloom_build(longs, "k", 10, 0.01)
+    rows = {r["k"]: r["might_contain"] for r in bloom_might_contain(longs, "k", bb).collect()}
+    assert rows == {1: True, None: None, 5: True}
+
+
+def test_catalyst_probe_of_union_bytes(spark):
+    kw = dict(expected_items=10_000, fpp=0.05)
+    a = bloom_build(spark.range(0, 3000).withColumnRenamed("id", "k"), "k", **kw)
+    b = bloom_build(spark.range(2500, 6000).withColumnRenamed("id", "k"), "k", **kw)
+    merged = BloomFilterSketch.from_bytes(a).union(BloomFilterSketch.from_bytes(b))
+    probe = np.arange(-1000, 9000, dtype=np.int64)
+    got = _probe_longs(spark, probe, merged.to_bytes())
+    assert got[(probe >= 0) & (probe < 6000)].all()
+    assert np.array_equal(got, merged.might_contain_longs(probe))
+
+
+def test_catalyst_probe_plan_has_no_python_eval(spark):
+    df = spark.range(0, 100).withColumnRenamed("id", "k")
+    bb = bloom_build(df, "k", 100, 0.01)
+    plan = bloom_might_contain(df, "k", bb)._jdf.queryExecution().executedPlan().toString()
+    assert "might_contain(" in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_bloom_build_catches_only_the_zero_row_failure(spark):
+    empty = spark.range(0, 10).where("id < 0").withColumnRenamed("id", "k")
+    assert not BloomFilterSketch.from_bytes(bloom_build(empty, "k", 100, 0.01)).words.any()
+
+    bad = spark.range(0, 10).select(F.raise_error(F.lit("bad key")).cast("long").alias("k"))
+    with pytest.raises(Exception, match="bad key"):
+        bloom_build(bad, "k", 100, 0.01)
