@@ -27,14 +27,14 @@ instead (tests/test_clustering.py).
 from __future__ import annotations
 
 import math
-import os
-from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
+
+from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import input_bytes
 
 # Per-dim rounding applied before the DECIMAL partial sums. 7 decimals is
 # far below fixture noise but makes the sum independent of partition order.
@@ -58,21 +58,9 @@ def _adaptive_partitions(df: DataFrame) -> int:
     count); at cluster scale the same constant would under-split. Falls
     back to defaultParallelism when input bytes are unknowable (non-file
     sources)."""
-    try:
-        total = 0
-        for uri in df.inputFiles():
-            if not uri.startswith("file:"):
-                return df.sparkSession.sparkContext.defaultParallelism
-            total += os.path.getsize(unquote(urlparse(uri).path))
-        if total > 0:
-            return max(1, math.ceil(total / _ASSIGN_TARGET_BYTES))
-    except (OSError, ValueError) as exc:
-        # narrow fallback (ADVICE r13 #3): a real bug in the size probe
-        # (URI parsing on a new source type) should be visible, not
-        # silently revert the optimization
-        import logging
-
-        logging.getLogger(__name__).debug("size probe failed: %s", exc)
+    total = input_bytes(df)
+    if total > 0:
+        return max(1, math.ceil(total / _ASSIGN_TARGET_BYTES))
     return df.sparkSession.sparkContext.defaultParallelism
 
 

@@ -51,6 +51,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import input_bytes
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -100,20 +102,9 @@ def _spread(src: DataFrame, heavy: bool = False) -> DataFrame:
     count (the r14 A/B: size-derived 7 tasks cost gif +40%..2x while the
     byte-light wav/bmp/avi/tiff family gained 28-45% from fewer tasks)."""
     import math
-    import os
-    from urllib.parse import unquote, urlparse
 
-    spark = src.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    try:
-        total = 0
-        for uri in src.inputFiles():
-            if not uri.startswith("file:"):
-                total = 0
-                break
-            total += os.path.getsize(unquote(urlparse(uri).path))
-    except Exception:
-        total = 0
+    cores = src.sparkSession.sparkContext.defaultParallelism
+    total = input_bytes(src)
     if total <= 0:
         return src.repartition(cores)
     min_bytes = _CODEC_MIN_BYTES_PER_TASK // 8 if heavy else _CODEC_MIN_BYTES_PER_TASK

@@ -58,14 +58,16 @@ from contextlib import contextmanager
 # consumer subtree is a cheap scan with real file statistics). The returned
 # query plan lazily scans its snapshot, so the writing operator can never
 # delete it synchronously; r13 leaked these dirs (ADVICE r13 #2). Every
-# snapshot now registers here and the sweep harnesses (bench.py,
-# tools/check_oracle.py, tools/retime.py) release between queries, with an
-# atexit sweep catching one-shot sessions.
+# snapshot, and every bounded streaming run's checkpoint
+# (streaming/runner._ephemeral_ckpt), registers here and the sweep harnesses
+# (bench.py, tools/check_oracle.py, tools/retime.py) release between
+# queries, with an atexit sweep catching one-shot sessions.
 _TMP_SNAPSHOT_DIRS: list[str] = []
 
 
 def tmp_snapshot_dir(prefix: str = "bfcms_snap_", dir: str | None = None) -> str:
-    """A fresh tmp dir for a stage snapshot, registered for deferred cleanup.
+    """A fresh tmp dir for a stage snapshot (or a bounded streaming run's
+    checkpoint), registered for deferred cleanup.
 
     Written FRESH inside the calling query on every invocation — never keyed
     on input paths, never reused across runs (reuse would be result caching,
@@ -78,33 +80,13 @@ def tmp_snapshot_dir(prefix: str = "bfcms_snap_", dir: str | None = None) -> str
     return d
 
 
-# Streaming checkpoint dirs (streaming/runner._ephemeral_ckpt) are swept by
-# GLOB + mtime guard instead of by registration: registering from inside
-# runner.py would put the cleanup call into the implementation-fingerprint
-# closure of every streaming query (plans/implfp.py) and flood the driver's
-# r14 hash window with 48 re-checks for a harness-only change. The guard
-# (only dirs this process could have created: mtime >= process start)
-# keeps a concurrently running session's live checkpoints safe; harnesses
-# here run queries serially.
-_PROCESS_T0 = __import__("time").time()
-_CKPT_GLOB_ROOTS = ["/dev/shm", tempfile.gettempdir()]
-
-
 def release_tmp_snapshots() -> None:
-    """Delete every registered snapshot dir (call AFTER the query's action:
-    the lazily returned plan references the snapshot until materialized),
-    plus this process's ephemeral streaming-checkpoint dirs."""
+    """Delete every registered snapshot and streaming-checkpoint dir (call
+    AFTER the query's action: the lazily returned plan references the
+    snapshot until materialized). Only dirs this process registered are
+    touched, so a concurrent session's live dirs are safe."""
     while _TMP_SNAPSHOT_DIRS:
         shutil.rmtree(_TMP_SNAPSHOT_DIRS.pop(), ignore_errors=True)
-    import glob
-
-    for root in _CKPT_GLOB_ROOTS:
-        for d in glob.glob(os.path.join(root, "bfcms_ckpt_*")):
-            try:
-                if os.stat(d).st_mtime >= _PROCESS_T0 - 1.0:
-                    shutil.rmtree(d, ignore_errors=True)
-            except OSError:
-                pass
 
 
 atexit.register(release_tmp_snapshots)

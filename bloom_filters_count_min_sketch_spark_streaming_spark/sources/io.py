@@ -12,7 +12,9 @@ nothing here changes at scale.
 
 from __future__ import annotations
 
+import logging
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,6 +59,23 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # which is what the fixtures encode and DuckDB returns.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def input_bytes(df: DataFrame) -> int:
+    """Total on-disk bytes of the files ``df`` scans, for sizing partition
+    counts from input volume. 0 when the size is unknowable: a non-``file:``
+    source, or a failed stat or URI parse (logged at debug, so a broken probe
+    on a new source type is visible rather than silently wrong)."""
+    total = 0
+    try:
+        for uri in df.inputFiles():
+            if not uri.startswith("file:"):
+                return 0
+            total += os.path.getsize(unquote(urlparse(uri).path))
+    except (OSError, ValueError) as exc:
+        logging.getLogger(__name__).debug("input size probe failed: %s", exc)
+        return 0
+    return total
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

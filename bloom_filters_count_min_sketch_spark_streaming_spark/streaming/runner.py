@@ -26,6 +26,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bloom_filters_count_min_sketch_spark_streaming_spark.session import tmp_snapshot_dir
 from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import load
 
 _STREAM_CACHE_ROOT = os.path.join(tempfile.gettempdir(), "bfcms_stream_src")
@@ -37,9 +38,10 @@ def _ephemeral_ckpt() -> str:
     provider's write+rename commits are then memory-speed instead of
     paying disk fsync per micro-batch per partition. Production streams
     point checkpointLocation at durable storage (S3/HDFS); that is a
-    config choice, not a code path."""
+    config choice, not a code path. Registered with the session's tmp
+    dirs, so ``session.release_tmp_snapshots()`` deletes it."""
     root = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    return tempfile.mkdtemp(prefix="bfcms_ckpt_", dir=root)
+    return tmp_snapshot_dir(prefix="bfcms_ckpt_", dir=root)
 
 
 

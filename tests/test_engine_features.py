@@ -118,35 +118,6 @@ def test_streaming_parquet_file_sink(spark, sf_dir):
     assert spark.read.parquet(out).count() == load(spark, sf_dir, "events").count()
 
 
-def test_registry_prefix_carries_identity_queries():
-    """The driver verifies a prefix of queries() (r1: first 50). The
-    r6 computed rotation (registry._apply_priority_order) must keep the
-    engine's identity — sketches, dedup, ANN, streaming — pinned in that
-    prefix via registry._PINS, and keep the prefix entirely oracle-backed
-    (the fill stage only selects oracle-backed queries)."""
-    from bloom_filters_count_min_sketch_spark_streaming_spark.plans import registry
-
-    registry.load_all_query_modules()
-    prefix = list(registry.QUERIES)[:50]
-    for marker in registry.active_pins():
-        assert marker in prefix, f"pin {marker} fell out of the driver prefix"
-    # while any oracle-backed query is still never-driver-checked, retirement
-    # must NOT have activated: the full pin set holds its slots
-    checked = set(registry.driver_checked_rounds())
-    tail = [n for n in registry.QUERIES if n in registry.ORACLES and n not in checked]
-    if tail:
-        assert registry.active_pins() == [
-            n for n in registry._PINS if n in registry.QUERIES
-        ], "pin retirement activated while the never-checked tail is non-empty"
-    # the permanently-kept pin set must still span the identity families
-    permanent = [n for n in registry._PINS if n not in registry._PIN_RETIRE_ELIGIBLE]
-    families = ("bloom_", "cms_", "dedup_", "knn_", "stream_")
-    for fam in families:
-        assert any(p.startswith(fam) for p in permanent), f"no permanent {fam} pin"
-    n_oracle = sum(1 for n in prefix if n in registry.ORACLES)
-    assert n_oracle == 50, f"only {n_oracle}/50 prefix queries are oracle-backed"
-
-
 def test_parquet_rowgroup_bloom_filter_written(spark, sf_dir, tmp_path):
     """Storage-layer Bloom filters (B1/B3 depth): Spark's parquet writer
     embeds per-row-group bloom filters for the flagged column, letting
@@ -364,79 +335,3 @@ def test_timestamp_nanos_canary_all_surface_forms(spark, tmp_path):
         assert "PARQUET_TYPE_ILLEGAL" in str(exc), str(exc)
     else:
         assert got_ns == expected, f"TIMESTAMP(NANOS) diverged: {got_ns}"
-
-
-def test_registry_prefix_rotates_driver_coverage():
-    """The driver hash-checks only the first 50 registry entries per
-    round. To keep driver-green coverage EXPANDING instead of re-proving
-    a fixed set, the prefix is now COMPUTED (registry._apply_priority_order,
-    VERDICT r5 item 6): pins first, then never-driver-checked oracle-backed
-    queries in registration order. This test verifies the computed prefix
-    actually delivers fresh coverage each round — capped by how many
-    never-checked oracle-backed queries even remain."""
-    from bloom_filters_count_min_sketch_spark_streaming_spark.plans import registry
-
-    seen = set(registry.driver_checked_rounds())
-    if not seen:
-        return  # no driver rounds recorded yet
-    registry.load_all_query_modules()
-    prefix = list(registry.QUERIES)[:50]
-    fresh = [n for n in prefix if n not in seen]
-    remaining = [
-        n for n in registry.QUERIES if n in registry.ORACLES and n not in seen
-    ]
-    want = min(10, len(remaining))
-    assert len(fresh) >= want, (
-        f"only {len(fresh)} never-driver-checked queries in the prefix "
-        f"({fresh}) with {len(remaining)} still unchecked; rotation broke"
-    )
-    # Active pins (the engine's identity queries, minus any retired once
-    # the never-checked tail drains) must always stay in the prefix.
-    for pin in registry.active_pins():
-        assert pin in prefix, f"identity pin {pin} fell out of the prefix"
-
-
-def test_pin_retirement_activates_only_when_tail_drained(monkeypatch):
-    """r12 verdict #7: once every oracle-backed query has a driver-green
-    record, long-proven retire-eligible pins demote to ordinary rotation
-    members (freeing prefix slots for the least-recently-checked tail);
-    until then the prefix is bit-identical to pre-retirement behavior."""
-    from bloom_filters_count_min_sketch_spark_streaming_spark.plans import registry
-
-    registry.load_all_query_modules()
-    all_pins = [n for n in registry._PINS if n in registry.QUERIES]
-
-    # Real state today: tail non-empty -> no retirement.
-    assert len(registry.active_pins()) == len(all_pins)
-
-    try:
-        # Simulate the drained-tail future: every oracle-backed query
-        # checked green in some round, pins green in many rounds.
-        fake_checked = {n: 12 for n in registry.QUERIES if n in registry.ORACLES}
-        fake_counts = {n: 12 for n in registry._PINS}
-        monkeypatch.setattr(registry, "driver_checked_rounds", lambda: fake_checked)
-        monkeypatch.setattr(registry, "driver_green_counts", lambda: fake_counts)
-        active = registry.active_pins()
-        assert active == [
-            n for n in all_pins if n not in registry._PIN_RETIRE_ELIGIBLE
-        ], "retire-eligible pins should demote once the tail is drained"
-        # A NEWLY-added pin (few green rounds) must keep its slot even if
-        # listed retire-eligible.
-        fake_counts2 = dict(fake_counts)
-        victim = next(iter(registry._PIN_RETIRE_ELIGIBLE))
-        fake_counts2[victim] = registry._PIN_RETIRE_MIN_GREEN_ROUNDS - 1
-        monkeypatch.setattr(registry, "driver_green_counts", lambda: fake_counts2)
-        assert victim in registry.active_pins(), (
-            "a pin below the green-round floor must not retire"
-        )
-        # And the reordered prefix under retirement stays 50 oracle-backed
-        # entries containing every still-active pin.
-        registry._apply_priority_order()
-        prefix = list(registry.QUERIES)[:50]
-        for pin in registry.active_pins():
-            assert pin in prefix
-        assert sum(1 for n in prefix if n in registry.ORACLES) == 50
-    finally:
-        monkeypatch.undo()
-        # restore the real computed order for any later test in the session
-        registry._apply_priority_order()

@@ -261,12 +261,10 @@ def test_chained_streaming_window_aggregations(spark, sf_dir, tmp_path):
     assert got == exact
 
 
-def test_state_metadata_source_lists_operators(spark, sf_dir):
+def test_state_metadata_source_lists_operators(spark, sf_dir, tmp_path):
     """The state-metadata source enumerates stateful operators, state store
     names, partition counts, and batch id ranges from a checkpoint — the
     ops-side complement of the statestore reader."""
-    import tempfile
-
     import pyspark.sql.functions as F
 
     src = events_stream_source(spark, sf_dir)
@@ -275,7 +273,7 @@ def test_state_metadata_source_lists_operators(spark, sf_dir):
         .groupBy(F.window("ts", "6 hours"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    ckpt = tempfile.mkdtemp(prefix="bfcms_ckpt_md_")
+    ckpt = str(tmp_path / "ckpt")
     q = (
         agg.writeStream.format("memory")
         .queryName("md_probe")
@@ -532,3 +530,30 @@ def test_stream_cms_counters_equal_batch_build(spark, sf_dir):
     )
     assert np.array_equal(fused_cust.table, batch_cust.table)
     assert fused_cust.total == batch_cust.total
+
+
+def test_release_deletes_only_registered_checkpoints(monkeypatch):
+    """release_tmp_snapshots() deletes the checkpoint dirs the runner made
+    and nothing else: a same-prefix dir made by another owner (a concurrent
+    test or bench run's live checkpoint) after this process started must
+    survive."""
+    import os
+    import shutil
+
+    from bloom_filters_count_min_sketch_spark_streaming_spark import session
+    from bloom_filters_count_min_sketch_spark_streaming_spark.streaming.runner import (
+        _ephemeral_ckpt,
+    )
+
+    # Release only what this test registers, not dirs earlier tests'
+    # lazily evaluated plans may still reference.
+    monkeypatch.setattr(session, "_TMP_SNAPSHOT_DIRS", [])
+    ours = _ephemeral_ckpt()
+    root = os.path.dirname(ours)
+    foreign = tempfile.mkdtemp(prefix="bfcms_ckpt_", dir=root)
+    try:
+        session.release_tmp_snapshots()
+        assert not os.path.exists(ours)
+        assert os.path.isdir(foreign)
+    finally:
+        shutil.rmtree(foreign, ignore_errors=True)

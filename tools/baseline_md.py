@@ -4,9 +4,8 @@ The prose table went stale once before (it still said "@ r5" four rounds
 after the binding record moved to the committed BENCH_FULL.json), which
 invites the same stale-baseline confusion the bench tripwire had to be
 hardened against. This script rewrites everything between the
-PER_QUERY_BASELINE markers from the CURRENT BENCH_FULL.json; closeout.py
-runs it right after bench.py so the table can never drift from the
-artifact again.
+PER_QUERY_BASELINE markers from the CURRENT BENCH_FULL.json; run it right
+after bench.py so the table cannot drift from the artifact.
 
 Usage: python tools/baseline_md.py
 """

@@ -78,6 +78,37 @@ def compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]:
     return problems
 
 
+def duckdb_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per fixture table under sf_dir,
+    the names every oracle SQL string reads."""
+    from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def release_query_state(spark) -> None:
+    """Unpersist every persisted RDD and delete the registered tmp dirs once
+    a query's result has been collected.
+
+    Many queries persist/localCheckpoint intermediates their lazily
+    returned plan still references, so they CANNOT unpersist before
+    returning; without sweep-level cleanup those caches accumulate in
+    executor storage across all 400+ queries. Stage snapshots and
+    streaming checkpoints are dead once the query's toPandas() ran;
+    without this a 496-query sweep leaks hundreds of tmp dirs."""
+    from bloom_filters_count_min_sketch_spark_streaming_spark.session import (
+        release_tmp_snapshots,
+    )
+
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    for k in jmap.keySet().toArray():
+        jmap.get(k).unpersist()
+    release_tmp_snapshots()
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -105,30 +136,7 @@ def main() -> int:
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    con = duckdb.connect()
-    from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import TABLES
-
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'")
-
-    def _release_persisted() -> None:
-        # Many queries persist/localCheckpoint intermediates their lazily
-        # returned plan still references, so they CANNOT unpersist before
-        # returning; without sweep-level cleanup those caches accumulate
-        # in executor storage across all 400+ queries. The driver's gate
-        # materializes one query at a time the same way, so releasing
-        # here mirrors its memory profile.
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for k in jmap.keySet().toArray():
-            jmap.get(k).unpersist()
-        # per-invocation tmp-parquet stage snapshots are dead once the
-        # query's toPandas() ran; without this a 496-query sweep leaks
-        # hundreds of /tmp dirs (ADVICE r13 #2)
-        from bloom_filters_count_min_sketch_spark_streaming_spark.session import (
-            release_tmp_snapshots,
-        )
-
-        release_tmp_snapshots()
+    con = duckdb_views(args.sf)
 
     names = args.names or list(queries)
     n_pass = n_fail = n_weak = 0
@@ -142,7 +150,7 @@ def main() -> int:
             n_fail += 1
             continue
         finally:
-            _release_persisted()
+            release_query_state(spark)
         if name not in oracles:
             print(f"weak {name}: rows={len(spdf)} (no oracle) [{time.time()-t0:.1f}s]")
             n_weak += 1
