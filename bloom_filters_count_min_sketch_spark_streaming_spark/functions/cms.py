@@ -113,6 +113,10 @@ class CountMinSketchTable:
         return int(per_row.min())
 
 
+# NumpyCMS.to_bytes counter widths (bytes per counter -> stored dtype)
+_CMS_COUNTER_DTYPES = {2: np.uint16, 4: np.uint32, 8: np.int64}
+
+
 @dataclass
 class NumpyCMS:
     """Self-contained numpy Count-Min Sketch for *engine-internal* state
@@ -180,22 +184,35 @@ class NumpyCMS:
         self.total += len(v)
 
     def to_bytes(self) -> bytes:
+        """Header (depth, width, total, counter width in bytes), hashA, then
+        the table in the narrowest of uint16 / uint32 / int64 that holds
+        every counter — a sketch over a few thousand items stores a quarter
+        of the int64 bytes. Negative counters (possible only from direct
+        table edits) stay int64. from_bytes widens back to int64, so all
+        arithmetic is unchanged."""
         import struct
 
-        head = struct.pack(">iiq", self.depth, self.width, self.total)
-        return head + self.hash_a.tobytes() + self.table.tobytes()
+        dtype = np.dtype(np.int64)
+        if self.table.min() >= 0:
+            top = self.table.max()
+            dtype = next(
+                (np.dtype(d) for d in (np.uint16, np.uint32) if top <= np.iinfo(d).max), dtype
+            )
+        head = struct.pack(">iiqB", self.depth, self.width, self.total, dtype.itemsize)
+        return head + self.hash_a.tobytes() + self.table.astype(dtype, copy=False).tobytes()
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "NumpyCMS":
         import struct
 
-        depth, width, total = struct.unpack(">iiq", data[:16])
-        off = 16
-        hash_a = np.frombuffer(data[off : off + 8 * depth], dtype=np.int64).copy()
+        depth, width, total, itemsize = struct.unpack(">iiqB", data[:17])
+        dtype = _CMS_COUNTER_DTYPES[itemsize]
+        off = 17
+        hash_a = np.frombuffer(data, dtype=np.int64, count=depth, offset=off).copy()
         off += 8 * depth
         table = (
-            np.frombuffer(data[off : off + 8 * depth * width], dtype=np.int64)
-            .copy()
+            np.frombuffer(data, dtype=dtype, count=depth * width, offset=off)
+            .astype(np.int64)
             .reshape(depth, width)
         )
         return cls(depth=depth, width=width, hash_a=hash_a, table=table, total=total)

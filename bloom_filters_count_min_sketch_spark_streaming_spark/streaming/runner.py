@@ -5,9 +5,9 @@ sketch/state update -> per-batch report). The Structured Streaming mapping:
 
 - **source**: the `events` table replayed as a file stream. To make
   micro-batching real (not one giant batch), the fixture is re-written once
-  into N range-partitioned parquet files and streamed with
-  ``maxFilesPerTrigger=1`` -> N deterministic micro-batches in event-id
-  (≈ time) order.
+  per process (deleted at exit) into N range-partitioned parquet files and
+  streamed with ``maxFilesPerTrigger=1`` -> N deterministic micro-batches
+  in event-id (≈ time) order.
 - **sink**: in-memory table for the bounded verification runs
   (``availableNow`` trigger processes the full backlog then stops); in
   production the same writeStream targets kafka/parquet/delta unchanged.
@@ -18,18 +18,20 @@ sketch/state update -> per-batch report). The Structured Streaming mapping:
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
+import shutil
 import tempfile
+import threading
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bloom_filters_count_min_sketch_spark_streaming_spark.session import tmp_snapshot_dir
 from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import load
-
-_STREAM_CACHE_ROOT = os.path.join(tempfile.gettempdir(), "bfcms_stream_src")
 
 
 def _ephemeral_ckpt() -> str:
@@ -42,7 +44,6 @@ def _ephemeral_ckpt() -> str:
     dirs, so ``session.release_tmp_snapshots()`` deletes it."""
     root = "/dev/shm" if os.path.isdir("/dev/shm") else None
     return tmp_snapshot_dir(prefix="bfcms_ckpt_", dir=root)
-
 
 
 def events_stream_source(spark: SparkSession, sf_dir: str, n_files: int = 2) -> DataFrame:
@@ -64,50 +65,12 @@ def table_stream_source(
     """Unbounded DataFrame replaying any fixture table as n_files
     deterministic micro-batches in ``order_col`` order (range-partitioned
     split + strictly ascending mtime stamps, see events_stream_source)."""
-    # Cache key includes the fixture's identity (size+mtime), so a changed
-    # fixture under the same path can't silently replay stale batches.
-    fixture = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = os.stat(fixture)
-        fingerprint = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        fingerprint = "nofile"
-    key = hashlib.md5(
-        f"{sf_dir}|{table}|{order_col}|{n_files}|{fingerprint}".encode()
-    ).hexdigest()[:12]
-    src_dir = os.path.join(_STREAM_CACHE_ROOT, key)
-    if not os.path.isdir(src_dir):
-        # Write to a temp dir, then atomically rename into place, so a
-        # concurrent first run can never observe a partial split.
-        tmp_dir = f"{src_dir}.tmp-{uuid.uuid4().hex[:8]}"
-        batch = load(spark, sf_dir, table)
-        batch.repartitionByRange(n_files, order_col).write.mode("overwrite").parquet(tmp_dir)
-        try:
-            os.rename(tmp_dir, src_dir)
-        except OSError:
-            # lost the race: another run published the same split
-            import shutil
 
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-    # FileStreamSource orders files by modification time (path is only a
-    # tie-break in some code paths, and the parallel parquet write stamps
-    # all parts with the SAME mtime) — so replay order, and therefore
-    # watermark monotonicity, was a coin flip. Append-mode queries then
-    # drop whole "late" batches. Stamp strictly increasing mtimes in
-    # part-file (= range-partition = time) order; idempotent, repairs
-    # previously written caches.
-    parts = sorted(
-        f for f in os.listdir(src_dir) if f.startswith("part-") and f.endswith(".parquet")
-    )
-    base = 1_600_000_000  # fixed epoch: deterministic across runs
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(src_dir, f), (base + i, base + i))
-    schema = spark.read.parquet(src_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
+    def write(out: str) -> None:
+        batch = load(spark, sf_dir, table)
+        batch.repartitionByRange(n_files, order_col).write.parquet(out)
+
+    return _replay_split(spark, sf_dir, table, f"range|{order_col}|{n_files}", write)
 
 
 def ntile_stream_source(
@@ -133,19 +96,8 @@ def ntile_stream_source(
     """
     from pyspark.sql.window import Window
 
-    fixture = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = os.stat(fixture)
-        fingerprint = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        fingerprint = "nofile"
-    key = hashlib.md5(
-        f"ntile|{sf_dir}|{table}|{order_col}|{n_files}|{fingerprint}".encode()
-    ).hexdigest()[:12]
-    src_dir = os.path.join(_STREAM_CACHE_ROOT, key)
-    if not os.path.isdir(src_dir):
-        tmp_dir = f"{src_dir}.tmp-{uuid.uuid4().hex[:8]}"
-        os.makedirs(tmp_dir)
+    def write(out: str) -> None:
+        os.makedirs(out)
         bdf = load(spark, sf_dir, table).withColumn(
             "batch",
             F.ntile(n_files).over(Window.orderBy(order_col)).cast("long"),
@@ -153,10 +105,8 @@ def ntile_stream_source(
         bdf.persist()
         try:
             for b in range(1, n_files + 1):
-                part_tmp = os.path.join(tmp_dir, f"w{b}")
-                bdf.filter(F.col("batch") == b).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(part_tmp)
+                part_tmp = os.path.join(out, f"w{b}")
+                bdf.filter(F.col("batch") == b).coalesce(1).write.parquet(part_tmp)
                 (part,) = [
                     f
                     for f in os.listdir(part_tmp)
@@ -164,24 +114,61 @@ def ntile_stream_source(
                 ]
                 os.rename(
                     os.path.join(part_tmp, part),
-                    os.path.join(tmp_dir, f"part-{b:05d}.parquet"),
+                    os.path.join(out, f"part-{b:05d}.parquet"),
                 )
-                import shutil
-
                 shutil.rmtree(part_tmp, ignore_errors=True)
         finally:
             bdf.unpersist()
-        try:
-            os.rename(tmp_dir, src_dir)
-        except OSError:
-            import shutil
 
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-    # strictly ascending mtimes in batch order (see table_stream_source)
+    return _replay_split(spark, sf_dir, table, f"ntile|{order_col}|{n_files}", write)
+
+
+# Every split this process writes lives under one dir, made on first use and
+# deleted at interpreter exit. It outlives release_tmp_snapshots(): a split
+# is an input replayed by every later query over the same fixture, not
+# per-query state.
+_SPLIT_ROOT: str | None = None
+_SPLIT_LOCK = threading.Lock()
+
+
+def _replay_split(
+    spark: SparkSession, sf_dir: str, table: str, layout: str, write: Callable[[str], None]
+) -> DataFrame:
+    """Write (once per process) a fixture table split into one parquet file
+    per micro-batch with ``write(dir)``, and return a stream replaying those
+    files one per trigger in part-file order.
+
+    The cache key includes the fixture's identity (size+mtime), so a changed
+    fixture under the same path can't silently replay stale batches."""
+    global _SPLIT_ROOT
+    fixture = os.path.join(sf_dir, f"{table}.parquet")
+    try:
+        st = os.stat(fixture)
+        fingerprint = f"{st.st_size}:{st.st_mtime_ns}"
+    except OSError:
+        fingerprint = "nofile"
+    key = hashlib.md5(f"{layout}|{sf_dir}|{table}|{fingerprint}".encode()).hexdigest()[:12]
+    with _SPLIT_LOCK:
+        if _SPLIT_ROOT is None:
+            _SPLIT_ROOT = tempfile.mkdtemp(prefix="bfcms_stream_src_")
+            atexit.register(shutil.rmtree, _SPLIT_ROOT, True)
+        src_dir = os.path.join(_SPLIT_ROOT, key)
+        if not os.path.isdir(src_dir):
+            try:
+                write(src_dir)
+            except BaseException:
+                shutil.rmtree(src_dir, ignore_errors=True)  # never replay a partial split
+                raise
+    # FileStreamSource orders files by modification time (path is only a
+    # tie-break in some code paths, and the parallel parquet write stamps
+    # all parts with the SAME mtime) — so replay order, and therefore
+    # watermark monotonicity, was a coin flip. Append-mode queries then
+    # drop whole "late" batches. Stamp strictly increasing mtimes in
+    # part-file (= range-partition / batch = time) order.
     parts = sorted(
         f for f in os.listdir(src_dir) if f.startswith("part-") and f.endswith(".parquet")
     )
-    base = 1_600_000_000
+    base = 1_600_000_000  # fixed epoch: deterministic across runs
     for i, f in enumerate(parts):
         os.utime(os.path.join(src_dir, f), (base + i, base + i))
     schema = spark.read.parquet(src_dir).schema
@@ -203,7 +190,7 @@ def run_available_now(
     stream_df: DataFrame,
     output_mode: str = "complete",
     query_name: str | None = None,
-    state_partitions: int = 8,
+    state_partitions: int | None = None,
     state_provider: str | None = None,
 ) -> DataFrame:
     """Run a bounded streaming query to completion into a memory sink and
@@ -211,15 +198,18 @@ def run_available_now(
     as micro-batches (respecting maxFilesPerTrigger), then stop.
 
     ``state_partitions`` sizes the state store (fixed per checkpoint at
-    first run). Fixture state is kilobytes, so a handful of partitions
-    avoids per-partition commit overhead dominating. Default 8: the r8
-    re-sweep at sf0.1 (windowed 2.40/2.43/3.07 s at sp=4/8/16; session
-    windows 3.69/3.47/3.87; python-stateful CMS 3.39/3.39/3.42; minhash
-    dedup 6.65/5.99/6.28) shows 8 best-or-tied for BOTH the JVM-stateful
-    and Arrow-python-stateful families on this host — r6's sp=16 pick was
-    within host noise. At real scale size this to state volume / executor
-    count instead. Results are partition-count invariant — only the
-    physical distribution changes.
+    first run). Default ``None`` = the query's own session's
+    ``defaultParallelism``, one stateful task per task slot (not
+    ``spark.sql.shuffle.partitions``, which is 200 on a vanilla session).
+    Every state partition is a task with a fixed commit cost in each
+    micro-batch, so partitions beyond the slots only queue. perfbench
+    stream_state (per-key running CMS and Bloom, 8 keys, 2 micro-batches;
+    4-core host, mean of seeds 1-2) drained 70k/71k/66k/45k rows/s at
+    sp=1/2/4/8, micro-batch p50 366/362/394/599 ms. 1 or 2 win there only
+    because 8 keys' work (a few ms each) is less than a task's fixed cost;
+    state holding many keys needs every slot. At real scale size this to
+    state volume / executor count instead. Results are partition-count
+    invariant — only the physical distribution changes.
 
     ``state_provider``: ``"rocksdb"`` runs the query on the RocksDB state
     store (spilling, incremental-checkpoint — the 100 TB provider, where
@@ -233,6 +223,8 @@ def run_available_now(
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_provider = spark.conf.get(_PROVIDER_CONF, None)
     prev_nodata = spark.conf.get(_NODATA_CONF, None)
+    if state_partitions is None:
+        state_partitions = spark.sparkContext.defaultParallelism
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     # The trailing no-data micro-batch exists to advance the watermark one
     # last time so append-mode windowed/join results flush. A plan with no

@@ -5,8 +5,6 @@ sink (C12/B3)."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import load
@@ -74,11 +72,11 @@ def test_observe_metrics(spark, sf_dir):
     assert obs.get["max_v"] > 0
 
 
-def test_parquet_rowgroup_bloom_filter_roundtrip(spark, sf_dir):
+def test_parquet_rowgroup_bloom_filter_roundtrip(spark, sf_dir, tmp_path):
     """Parquet-level Bloom filters (the storage-side sibling of the
     engine's Bloom operator): write with bloom enabled, read back with an
     equality predicate — results identical, file readable."""
-    out = tempfile.mkdtemp(prefix="bloom_parquet_")
+    out = str(tmp_path)
     ev = load(spark, sf_dir, "events")
     (
         ev.write.mode("overwrite")
@@ -102,10 +100,10 @@ def test_streaming_dedup_within_watermark(spark, sf_dir):
     assert out.distinct().count() == n_events
 
 
-def test_streaming_parquet_file_sink(spark, sf_dir):
+def test_streaming_parquet_file_sink(spark, sf_dir, tmp_path):
     """Streaming parquet sink: append the raw stream to files, read back."""
-    out = tempfile.mkdtemp(prefix="stream_sink_")
-    ckpt = tempfile.mkdtemp(prefix="stream_sink_ckpt_")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
     src = events_stream_source(spark, sf_dir)
     q = (
         src.writeStream.format("parquet")

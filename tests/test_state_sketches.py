@@ -610,3 +610,50 @@ def test_streaming_lossy_counting_pruning_regime(spark, tmp_path):
     for item, v in final.items():
         assert 0 < v <= true[item], (item, v, true[item])
         assert true[item] - v <= eps * n, (item, v, true[item], eps * n)
+
+
+def _cms_with_counters(values):
+    """A small NumpyCMS whose first counters are set to ``values``."""
+    cms = NumpyCMS.from_params(eps=0.01, confidence=0.9, seed=13)
+    flat = cms.table.reshape(-1)
+    flat[: len(values)] = values
+    cms.total = int(max(values))
+    return cms
+
+
+def test_numpy_cms_bytes_use_the_narrowest_counter_width():
+    """to_bytes stores counters as uint16 / uint32 when the largest fits
+    and int64 otherwise (any negative counter included); from_bytes
+    widens back to int64 with every counter intact."""
+    cases = [
+        ([65_535, 1], 2),
+        ([65_536, 1], 4),
+        ([2**32 - 1], 4),
+        ([2**32, 7], 8),
+        ([3, -1], 8),
+    ]
+    for values, itemsize in cases:
+        cms = _cms_with_counters(values)
+        raw = cms.to_bytes()
+        head = 17 + 8 * cms.depth
+        assert len(raw) == head + itemsize * cms.depth * cms.width, values
+        back = NumpyCMS.from_bytes(raw)
+        assert back.table.dtype == np.int64
+        assert np.array_equal(back.table, cms.table), values
+        assert np.array_equal(back.hash_a, cms.hash_a)
+        assert (back.depth, back.width, back.total) == (cms.depth, cms.width, cms.total)
+
+
+def test_numpy_cms_small_sketch_encodes_smaller():
+    """A sketch over a few thousand items encodes in a quarter of the int64
+    table bytes, and estimates from the decoded sketch are unchanged."""
+    cms = NumpyCMS.from_params(eps=0.0001, confidence=0.999, seed=42)
+    vals = np.random.default_rng(2).integers(0, 20_000, 5_000).astype(np.int64)
+    cms.add_longs(vals)
+    raw = cms.to_bytes()
+    assert len(raw) < cms.table.nbytes // 3
+    back = NumpyCMS.from_bytes(raw)
+    keys = np.unique(vals)
+    assert np.array_equal(back.estimate_longs(keys), cms.estimate_longs(keys))
+    back.add_longs(vals)  # decoded state keeps accumulating in int64
+    assert back.table.max() == 2 * cms.table.max()

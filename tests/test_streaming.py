@@ -64,7 +64,7 @@ def test_stream_batches_replay_in_event_time_order(spark, sf_dir):
     assert maxes == sorted(maxes), f"batch max-ts not monotone: {maxes}"
 
 
-def test_watermark_drops_late_rows(spark):
+def test_watermark_drops_late_rows(spark, tmp_path):
     """Append-mode windowed agg with watermark: a row arriving after the
     watermark evicted its window is dropped (C7).
 
@@ -73,7 +73,7 @@ def test_watermark_drops_late_rows(spark):
     time); a late row arriving in the same batch as the eviction still
     lands in state, so the drop is observable from the *next* batch on —
     that's Structured Streaming's documented lower-bound semantics."""
-    src_dir = tempfile.mkdtemp(prefix="late_src_")
+    src_dir = str(tmp_path)
 
     def mk(rows):
         return spark.createDataFrame(rows, ["id", "ts_s"]).select(
@@ -352,13 +352,11 @@ def test_stateful_session_event_time_timeout(spark, tmp_path):
     assert len(rows) == 2, rows
 
 
-def test_versioned_upsert_retry_idempotent(spark, sf_dir):
+def test_versioned_upsert_retry_idempotent(spark, sf_dir, tmp_path):
     """foreachBatch retry semantics: re-invoking the versioned merge with
     the SAME batch id must produce the identical version (state is read by
     version number, never a latest-pointer), so a post-failure replay
     cannot double-apply an increment."""
-    import tempfile
-
     from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import load
     from bloom_filters_count_min_sketch_spark_streaming_spark.streaming.runner import (
         versioned_merge_upsert,
@@ -366,7 +364,7 @@ def test_versioned_upsert_retry_idempotent(spark, sf_dir):
     from pyspark.sql import functions as F
 
     ev = load(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="upsert_retry_")
+    root = str(tmp_path)
 
     def inc(b):
         return (
@@ -408,12 +406,10 @@ def test_versioned_upsert_retry_idempotent(spark, sf_dir):
     assert retried == want
 
 
-def test_stream_progress_exposes_state_and_watermark(spark, sf_dir):
+def test_stream_progress_exposes_state_and_watermark(spark, sf_dir, tmp_path):
     """Streaming observability: StreamingQueryProgress must report state
     rows for the windowed aggregate and an advanced event-time watermark
     — what a production stream's health monitor actually reads."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from bloom_filters_count_min_sketch_spark_streaming_spark.streaming.runner import (
@@ -430,7 +426,7 @@ def test_stream_progress_exposes_state_and_watermark(spark, sf_dir):
         agg.writeStream.format("memory")
         .queryName("progress_probe")
         .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bfcms_prog_"))
+        .option("checkpointLocation", str(tmp_path))
         .trigger(availableNow=True)
         .start()
     )
@@ -557,3 +553,61 @@ def test_release_deletes_only_registered_checkpoints(monkeypatch):
         assert os.path.isdir(foreign)
     finally:
         shutil.rmtree(foreign, ignore_errors=True)
+
+
+def test_sketch_state_outputs_independent_of_state_partitions(spark, sf_dir, tmp_path, monkeypatch):
+    """running_cms_estimates and running_bloom_distinct emit the same rows
+    with 1 state partition, with the default and with 8; the default is the
+    session's defaultParallelism (one stateful task per task slot)."""
+    from bloom_filters_count_min_sketch_spark_streaming_spark.streaming import runner, stateful
+
+    ckpts = []
+
+    def ckpt():
+        ckpts.append(str(tmp_path / f"ckpt{len(ckpts)}"))
+        return ckpts[-1]
+
+    monkeypatch.setattr(runner, "_ephemeral_ckpt", ckpt)
+    probes = [0, 1, 2, 3, 5, 8, 13, 21, 10**6]
+    builds = {
+        "cms": lambda src: stateful.running_cms_estimates(src, "event_type", "user_id", probes),
+        "bloom": lambda src: stateful.running_bloom_distinct(src, "event_type", "user_id"),
+    }
+    for label, build in builds.items():
+        outs = {}
+        for parts in (1, None, 8):
+            src = events_stream_source(spark, sf_dir)
+            out = run_available_now(build(src), "append", state_partitions=parts)
+            outs[parts] = sorted(tuple(r) for r in out.collect())
+            (md,) = spark.read.format("state-metadata").load(ckpts[-1]).collect()
+            want = spark.sparkContext.defaultParallelism if parts is None else parts
+            assert md.numPartitions == want, (label, parts, md.numPartitions)
+        assert outs[1], label
+        assert outs[1] == outs[None] == outs[8], label
+
+
+def test_stream_split_outlives_release_and_is_owned_by_the_process(spark, sf_dir, monkeypatch):
+    """The stream-source split is written once per process under one
+    per-process dir: release_tmp_snapshots() between queries keeps it, and
+    a second source over the same fixture reuses it instead of re-splitting."""
+    import os
+
+    from bloom_filters_count_min_sketch_spark_streaming_spark import session
+    from bloom_filters_count_min_sketch_spark_streaming_spark.streaming import runner
+
+    # Release only what this test registers, not dirs earlier tests'
+    # lazily evaluated plans may still reference.
+    monkeypatch.setattr(session, "_TMP_SNAPSHOT_DIRS", [])
+    events_stream_source(spark, sf_dir, n_files=3)
+    root = runner._SPLIT_ROOT
+    assert root and os.path.basename(root).startswith("bfcms_stream_src_")
+    assert os.path.dirname(root) == tempfile.gettempdir()
+    splits = os.listdir(root)
+    for d in splits:  # Spark ignores "_"-prefixed files when reading
+        open(os.path.join(root, d, "_written_once"), "w").close()
+    session.release_tmp_snapshots()
+    assert events_stream_source(spark, sf_dir, n_files=3).isStreaming
+    assert runner._SPLIT_ROOT == root
+    assert sorted(os.listdir(root)) == sorted(splits)
+    for d in splits:
+        assert os.path.exists(os.path.join(root, d, "_written_once")), d

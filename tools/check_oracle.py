@@ -80,10 +80,17 @@ def compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]:
 
 def duckdb_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """A DuckDB connection with one view per fixture table under sf_dir,
-    the names every oracle SQL string reads."""
+    the names every oracle SQL string reads.
+
+    DuckDB's own default limit is 80% of physical RAM, which beside the
+    Spark driver heap lets one oracle exhaust the host and kill the whole
+    sweep; at a quarter of RAM such an oracle raises OutOfMemoryException
+    instead, which the sweep reports as that query's FAIL."""
     from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import TABLES
 
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
     con = duckdb.connect()
+    con.sql(f"SET memory_limit = '{ram_mb // 4}MB'")
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con
