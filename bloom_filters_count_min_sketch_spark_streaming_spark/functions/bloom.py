@@ -212,6 +212,9 @@ class NumpyBloom:
         bits = np.frombuffer(data[off : off + n_bits // 8], dtype=np.uint64).copy()
         return cls(n_bits, hash_a, bits)
 
+    def __reduce__(self):
+        return type(self).from_bytes, (self.to_bytes(),)
+
 
 class CountingBloom:
     """Counting Bloom filter (Fan et al., ToN 2000): int64 counters instead

@@ -217,6 +217,10 @@ class NumpyCMS:
         )
         return cls(depth=depth, width=width, hash_a=hash_a, table=table, total=total)
 
+    def __reduce__(self):
+        # pickle through the narrow codec, not the int64 table
+        return type(self).from_bytes, (self.to_bytes(),)
+
     def merge(self, other: "NumpyCMS") -> "NumpyCMS":
         if (self.depth, self.width) != (other.depth, other.width) or not np.array_equal(
             self.hash_a, other.hash_a

@@ -147,3 +147,6 @@ class KLLSketch:
             )
             off += 8 * ln
         return sk
+
+    def __reduce__(self):
+        return type(self).from_bytes, (self.to_bytes(),)

@@ -176,6 +176,9 @@ class TDigest:
             np.frombuffer(weights_b, dtype=np.int64),
         )
 
+    def __reduce__(self):
+        return type(self).from_bytes, (self.compression, *self.to_bytes())
+
     def is_saturated(self) -> bool:
         """True iff every centroid is a singleton (the exact regime)."""
         return bool(len(self.weights)) and bool((self.weights == 1).all())

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from bloom_filters_count_min_sketch_spark_streaming_spark.plans.registry import query
+from bloom_filters_count_min_sketch_spark_streaming_spark.session import tmp_snapshot_dir
 from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import load
 
 
@@ -307,7 +308,7 @@ def udtf_power_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _roundtrip(spark: SparkSession, sf_dir: str, fmt: str, **read_opts) -> DataFrame:
     src = load(spark, sf_dir, "nation")
-    out = os.path.join(tempfile.gettempdir(), f"bfcms_rt_{fmt}_{os.path.basename(sf_dir)}")
+    out = tmp_snapshot_dir(prefix=f"bfcms_rt_{fmt}_")
     src.coalesce(1).write.mode("overwrite").format(fmt).options(**read_opts).save(out)
     return (
         spark.read.format(fmt)
@@ -353,7 +354,7 @@ def source_roundtrip_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM-side split/cast — the line-oriented ingest path a socket/text
     stream source would feed."""
     src = load(spark, sf_dir, "nation")
-    out = os.path.join(tempfile.gettempdir(), f"bfcms_rt_text_{os.path.basename(sf_dir)}")
+    out = tmp_snapshot_dir(prefix="bfcms_rt_text_")
     src.select(
         F.concat_ws("|", F.col("n_nationkey"), F.col("n_name"), F.col("n_regionkey")).alias("value")
     ).coalesce(1).write.mode("overwrite").format("text").save(out)
@@ -796,9 +797,7 @@ def sink_partitioned_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserts the plan shape.
     """
     src = load(spark, sf_dir, "orders")
-    out = os.path.join(
-        tempfile.gettempdir(), f"bfcms_part_orders_{os.path.basename(sf_dir)}"
-    )
+    out = tmp_snapshot_dir(prefix="bfcms_part_orders_")
     src.withColumn("o_month", F.date_format("o_orderdate", "yyyy-MM")).write.mode(
         "overwrite"
     ).partitionBy("o_month").parquet(out)

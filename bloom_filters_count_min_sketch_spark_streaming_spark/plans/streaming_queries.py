@@ -1771,11 +1771,10 @@ def stream_iblt_replication_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     w = Window.partitionBy("shard").orderBy(F.col("seq").desc())
     last = out.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
 
-    import pickle
-
     streamed: dict[int, list[int]] = {}
     for r in last.select("blob").collect():  # bounded: shards rows, m cells
-        streamed.update(pickle.loads(bytes(r["blob"])))
+        rows = np.frombuffer(bytes(r["blob"]), dtype=np.int64).reshape(-1, 4)
+        streamed.update((c, [n, kx, gx]) for c, n, kx, gx in rows.tolist())
 
     warehouse = (
         load(spark, sf_dir, "orders")

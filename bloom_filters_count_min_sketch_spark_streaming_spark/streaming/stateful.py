@@ -1,19 +1,29 @@
 """Custom stateful streaming operators (SURVEY §2.C C8 — the reference's
 architectural heart: updateStateByKey-style running state across batches).
 
-Implemented with ``applyInPandasWithState``: per-key state lives in the
-state store (checkpointed, exactly-once), Python sees Arrow batches of the
-key's rows per trigger. Two operators:
+Every operator here except ``sessionize_with_timeout`` is a ``step``
+function handed to ``keyed_fold``, which owns the state-store side:
 
-- running per-key counters (the reference's word-count-across-batches);
-- running per-key Count-Min Sketch, kept as serialized table bytes in
-  state and merged batch-by-batch (the reference's CMS-over-stream), with
-  the numpy CMS from functions/cms.py.
+    step(key, acc, batch, seq) -> (acc, out_pdf)
+
+``acc`` is the key's accumulator (``None`` on its first micro-batch): a
+sketch, a dict, a tuple of arrays — anything picklable. ``batch`` holds
+all of the key's rows in the micro-batch as one pandas frame, ``seq``
+counts the micro-batches in which the key had rows, and the rows of
+``out_pdf`` are appended to the output. This is the init/update/query
+shape of a mergeable summary (Cormode, PODS 2021) written once: no
+operator declares a state schema, (de)serializes its own state or keeps
+its own batch counter. Sketches serialize through their own compact
+codecs (``__reduce__`` -> ``to_bytes``).
+
+``sessionize_with_timeout`` keeps its own state schema: it is the one
+operator that needs event-time timeouts, which ``keyed_fold`` does not
+offer.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import numpy as np
@@ -33,6 +43,48 @@ from pyspark.sql.types import (
 from bloom_filters_count_min_sketch_spark_streaming_spark.functions.bloom import NumpyBloom
 from bloom_filters_count_min_sketch_spark_streaming_spark.functions.cms import NumpyCMS
 
+_FOLD_STATE = StructType([StructField("blob", BinaryType())])
+
+
+def keyed_fold(
+    stream_df: DataFrame,
+    keys: list[str],
+    out_schema: StructType,
+    step: Callable[[tuple, Any, pd.DataFrame, int], tuple[Any, pd.DataFrame]],
+) -> DataFrame:
+    """Group ``stream_df`` by ``keys`` and fold each key's micro-batches
+    into an accumulator kept in the state store (checkpointed,
+    exactly-once): ``step(key, acc, batch, seq) -> (acc, out_pdf)``.
+
+    ``key`` is the tuple of key values; ``acc`` is what ``step`` returned
+    for this key last time, ``None`` on its first batch; ``batch`` is
+    the key's rows of this micro-batch in one frame (a single Arrow chunk
+    is passed through without a copy); ``seq`` counts the micro-batches
+    in which this key had rows. ``out_pdf`` must match ``out_schema``.
+
+    State is one binary column holding ``pickle.dumps((seq, acc))``. With
+    ``NoTimeout`` Spark calls the fold only for keys that have rows, so
+    ``batch`` is never empty and a key absent from a batch keeps its
+    state (and its ``seq``) untouched.
+    """
+    import pickle
+
+    def update(
+        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        seq, acc = pickle.loads(state.get[0]) if state.exists else (0, None)
+        parts = list(pdfs)
+        batch = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
+        seq += 1
+        acc, out = step(key, acc, batch, seq)
+        state.update((pickle.dumps((seq, acc), protocol=pickle.HIGHEST_PROTOCOL),))
+        yield out
+
+    return stream_df.groupBy(*keys).applyInPandasWithState(
+        update, out_schema, _FOLD_STATE, "append", GroupStateTimeout.NoTimeout
+    )
+
+
 _COUNT_OUT = StructType(
     [
         StructField("key", StringType()),
@@ -40,7 +92,6 @@ _COUNT_OUT = StructType(
         StructField("running_total", LongType()),
     ]
 )
-_COUNT_STATE = StructType([StructField("total", LongType())])
 
 
 def running_counts(stream_df: DataFrame, key_col: str) -> DataFrame:
@@ -51,25 +102,13 @@ def running_counts(stream_df: DataFrame, key_col: str) -> DataFrame:
     correctness oracle.
     """
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        batch_n = 0
-        for pdf in pdfs:
-            batch_n += len(pdf)
-        (total,) = state.get if state.exists else (0,)
-        total += batch_n
-        state.update((total,))
-        yield pd.DataFrame(
-            {"key": [str(key[0])], "batch_events": [batch_n], "running_total": [total]}
+    def step(key, total, batch, _seq):
+        total = (total or 0) + len(batch)
+        return total, pd.DataFrame(
+            {"key": [str(key[0])], "batch_events": [len(batch)], "running_total": [total]}
         )
 
-    return (
-        stream_df.groupBy(key_col)
-        .applyInPandasWithState(
-            update, _COUNT_OUT, _COUNT_STATE, "append", GroupStateTimeout.NoTimeout
-        )
-    )
+    return keyed_fold(stream_df, [key_col], _COUNT_OUT, step)
 
 
 _COUNT_BATCH_OUT = StructType(
@@ -93,39 +132,21 @@ def running_counts_with_batch(
     A state-counter seq would instead number only the batches in which the
     key happened to appear, which no SQL oracle can see."""
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        batch_n = 0
-        seq = None
-        for pdf in pdfs:
-            batch_n += len(pdf)
-            if len(pdf):
-                mn, mx = int(pdf[batch_col].min()), int(pdf[batch_col].max())
-                if mn != mx or (seq is not None and seq != mn):
-                    raise ValueError(
-                        f"mixed batch ids in one micro-batch: {mn}..{mx}"
-                    )
-                seq = mn
-        (total,) = state.get if state.exists else (0,)
-        total += batch_n
-        state.update((total,))
-        yield pd.DataFrame(
+    def step(key, total, batch, _seq):
+        mn, mx = int(batch[batch_col].min()), int(batch[batch_col].max())
+        if mn != mx:
+            raise ValueError(f"mixed batch ids in one micro-batch: {mn}..{mx}")
+        total = (total or 0) + len(batch)
+        return total, pd.DataFrame(
             {
                 "key": [str(key[0])],
-                "seq": [seq],
-                "batch_events": [batch_n],
+                "seq": [mn],
+                "batch_events": [len(batch)],
                 "running_total": [total],
             }
         )
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update,
-        _COUNT_BATCH_OUT,
-        _COUNT_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
+    return keyed_fold(stream_df, [key_col], _COUNT_BATCH_OUT, step)
 
 
 _CMS_OUT = StructType(
@@ -135,7 +156,6 @@ _CMS_OUT = StructType(
         StructField("cms_est", LongType()),
     ]
 )
-_CMS_STATE = StructType([StructField("sketch", BinaryType())])
 
 
 def running_cms_estimates(
@@ -160,22 +180,16 @@ def running_cms_estimates(
     """
     probes = np.array(probe_ids, dtype=np.int64)
 
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            cms = NumpyCMS.from_bytes(bytes(state.get[0]))
-        else:
+    def step(key, cms, batch, _seq):
+        if cms is None:
             cms = NumpyCMS.from_params(eps, confidence, seed)
-        for pdf in pdfs:
-            cms.add_longs(pdf[value_col].to_numpy(dtype=np.int64))
-        state.update((cms.to_bytes(),))
+        cms.add_longs(batch[value_col].to_numpy(dtype=np.int64))
         est = cms.estimate_longs(probes)
-        yield pd.DataFrame(
+        return cms, pd.DataFrame(
             {"key": str(key[0]), "probe_id": probes, "cms_est": est}
         )
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update, _CMS_OUT, _CMS_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, [key_col], _CMS_OUT, step)
 
 
 _BLOOM_OUT = StructType(
@@ -184,9 +198,6 @@ _BLOOM_OUT = StructType(
         StructField("batch_new", LongType()),
         StructField("running_distinct", LongType()),
     ]
-)
-_BLOOM_STATE = StructType(
-    [StructField("sketch", BinaryType()), StructField("n_distinct", LongType())]
 )
 
 
@@ -207,31 +218,19 @@ def running_bloom_distinct(
     — the oracle. No false negatives => never double-counts a new value.
     """
 
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            raw, n_distinct = state.get
-            bloom = NumpyBloom.from_bytes(bytes(raw))
-        else:
-            bloom = NumpyBloom.from_params(expected_items, fpp, seed)
-            n_distinct = 0
-        batch_new = 0
-        for pdf in pdfs:
-            vals = pdf[value_col].to_numpy(dtype=np.int64)
-            # dedup within the batch, then test against the filter
-            vals = np.unique(vals)
-            seen = bloom.might_contain_longs(vals)
-            new_vals = vals[~seen]
-            bloom.add_longs(new_vals)
-            batch_new += int(len(new_vals))
+    def step(key, acc, batch, _seq):
+        bloom, n_distinct = acc or (NumpyBloom.from_params(expected_items, fpp, seed), 0)
+        # dedup within the batch, then test against the filter
+        vals = np.unique(batch[value_col].to_numpy(dtype=np.int64))
+        new_vals = vals[~bloom.might_contain_longs(vals)]
+        bloom.add_longs(new_vals)
+        batch_new = int(len(new_vals))
         n_distinct += batch_new
-        state.update((bloom.to_bytes(), n_distinct))
-        yield pd.DataFrame(
+        return (bloom, n_distinct), pd.DataFrame(
             {"key": [str(key[0])], "batch_new": [batch_new], "running_distinct": [n_distinct]}
         )
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update, _BLOOM_OUT, _BLOOM_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, [key_col], _BLOOM_OUT, step)
 
 
 _SESS_OUT = StructType(
@@ -321,10 +320,6 @@ _FIRST_SEEN_OUT = StructType(
         StructField("owner", LongType()),
     ]
 )
-# Sorted parallel int64 arrays packed as bytes: buckets ASC, owner per bucket.
-_FIRST_SEEN_STATE = StructType(
-    [StructField("buckets", BinaryType()), StructField("owners", BinaryType())]
-)
 _FIRST_SEEN_SHARDS = 64
 
 
@@ -342,7 +337,7 @@ def first_seen_flags(stream_df: DataFrame, band_col: str = "band", bucket_col: s
     meant ~70k pandas calls per replay, ~10 s of pure per-group overhead):
     group key is (band, bucket mod 64), state per shard is the
     shard's occupied buckets as SORTED parallel int64 arrays (buckets,
-    owners) packed into two binary blobs. Each micro-batch does ONE
+    owners). Each micro-batch does ONE
     vectorized numpy pass per shard — searchsorted membership, first-
     occurrence-per-new-bucket via flatnonzero, merge — so Python
     invocations are O(shards) per batch regardless of key cardinality,
@@ -358,18 +353,19 @@ def first_seen_flags(stream_df: DataFrame, band_col: str = "band", bucket_col: s
     EXACTNESS CONTRACT — exact for EVERY bucket type (r11): integer
     buckets keep their int64 value as state identity; any other type is
     cast to string and stored as its EXACT length-prefixed utf-8 bytes in
-    the shard's state array (fixed-width S dtype, width derived from the
-    blob, widened on demand) — only SHARD ASSIGNMENT hashes, so two
+    the shard's state array (fixed-width S dtype, widened on demand)
+    — only SHARD ASSIGNMENT hashes, so two
     distinct buckets can never merge and the output is always the batch
     SQL ``doc > MIN(doc) OVER (PARTITION BY band, bucket)``. Integer
     packing (as the LSH/winnowing callers do) remains the FAST path:
     8 bytes/bucket vs 8+len(bucket), and pure int64 compares.
     """
 
-    def _fold(b, d, sb, so, state: GroupState):
+    def _fold(b, d, sb, so):
         """Shared vectorized first-seen pass: works identically on int64
         bucket ids and fixed-width S-dtype exact byte keys (both sort,
-        searchsorted, and frombuffer/tobytes the same way)."""
+        searchsorted, and concatenate the same way). Returns the merged
+        sorted state arrays, the duplicate docs and their owners."""
         order = np.lexsort((d, b))
         b, d = b[order], d[order]
         if len(sb):
@@ -392,13 +388,8 @@ def first_seen_flags(stream_df: DataFrame, band_col: str = "band", bucket_col: s
             merged_b = np.concatenate([sb, bu[starts]])
             merged_o = np.concatenate([so, owners])
             o2 = np.argsort(merged_b, kind="stable")
-            state.update(
-                (
-                    np.ascontiguousarray(merged_b[o2]).tobytes(),
-                    np.ascontiguousarray(merged_o[o2]).tobytes(),
-                )
-            )
-        return np.concatenate(out_doc), np.concatenate(out_own)
+            sb, so = merged_b[o2], merged_o[o2]
+        return (sb, so), np.concatenate(out_doc), np.concatenate(out_own)
 
     def _emit(key, dups, owners):
         return pd.DataFrame(
@@ -409,63 +400,34 @@ def first_seen_flags(stream_df: DataFrame, band_col: str = "band", bucket_col: s
             }
         )
 
-    def update(key, pdfs, state: GroupState):
-        b_parts, d_parts = [], []
-        for pdf in pdfs:
-            b_parts.append(pdf["_fs_bid"].to_numpy(dtype=np.int64))
-            d_parts.append(pdf[doc_col].to_numpy(dtype=np.int64))
-        b = np.concatenate(b_parts) if b_parts else np.array([], dtype=np.int64)
-        d = np.concatenate(d_parts) if d_parts else np.array([], dtype=np.int64)
-        empty = np.array([], dtype=np.int64)
-        if len(b) == 0:
-            # typed empty: object/float64 columns would fight the LongType
-            # output schema if Arrow conversion ever tightens
-            yield pd.DataFrame({"band": empty, "doc": empty, "owner": empty})
-            return
-        if state.exists:
-            sb_raw, so_raw = state.get
-            sb = np.frombuffer(sb_raw, dtype=np.int64)
-            so = np.frombuffer(so_raw, dtype=np.int64)
-        else:
-            sb, so = empty, empty
-        dups, owners = _fold(b, d, sb, so, state)
-        yield _emit(key, dups, owners)
+    empty = np.array([], dtype=np.int64)
 
-    def update_bytes(key, pdfs, state: GroupState):
+    def step(key, acc, batch, _seq):
+        b = batch["_fs_bid"].to_numpy(dtype=np.int64)
+        d = batch[doc_col].to_numpy(dtype=np.int64)
+        acc, dups, owners = _fold(b, d, *(acc or (empty, empty)))
+        return acc, _emit(key, dups, owners)
+
+    def step_bytes(key, acc, batch, _seq):
         # EXACT identity for non-integer buckets: 4-byte big-endian length
         # prefix + raw utf-8 bytes, held in a fixed-width NUL-padded S
         # array. The prefix disambiguates the padding ("a" vs "a\x00"
         # would otherwise alias), so distinct buckets can NEVER merge —
-        # unlike a 64-bit hash identity. State width is derived from
-        # blob_len / count and widened on demand (astype pads with NUL,
-        # which the prefix makes identity-safe).
-        raw_parts, d_parts = [], []
-        for pdf in pdfs:
-            raw_parts.append(pdf["_fs_bkey"].to_numpy(dtype=object))
-            d_parts.append(pdf[doc_col].to_numpy(dtype=np.int64))
-        empty = np.array([], dtype=np.int64)
-        n = sum(len(p) for p in raw_parts)
-        if n == 0:
-            yield pd.DataFrame({"band": empty, "doc": empty, "owner": empty})
-            return
-        raw = np.concatenate(raw_parts)
-        d = np.concatenate(d_parts)
+        # unlike a 64-bit hash identity. The state array is widened on
+        # demand (astype pads with NUL, which the prefix makes
+        # identity-safe).
+        raw = batch["_fs_bkey"].to_numpy(dtype=object)
+        d = batch[doc_col].to_numpy(dtype=np.int64)
         b = np.array(
             [len(v).to_bytes(4, "big") + bytes(v) for v in raw], dtype=bytes
         )
-        if state.exists:
-            sb_raw, so_raw = state.get
-            so = np.frombuffer(so_raw, dtype=np.int64)
-            width = len(sb_raw) // len(so) if len(so) else b.dtype.itemsize
-            sb = np.frombuffer(sb_raw, dtype=f"S{width}")
-        else:
-            sb, so = np.array([], dtype=b.dtype), empty
+        sb, so = acc or (np.array([], dtype=b.dtype), empty)
         if sb.dtype.itemsize > b.dtype.itemsize:
             b = b.astype(sb.dtype)
         elif b.dtype.itemsize > sb.dtype.itemsize:
             sb = sb.astype(b.dtype)
-        dups, owners = _fold(b, d, sb, so, state)
-        yield _emit(key, dups, owners)
+        acc, dups, owners = _fold(b, d, sb, so)
+        return acc, _emit(key, dups, owners)
 
     # Bucket identity: native int64 for integer buckets (the fast path —
     # 8 bytes/entry, pure integer compares); EXACT utf-8 bytes for any
@@ -479,7 +441,7 @@ def first_seen_flags(stream_df: DataFrame, band_col: str = "band", bucket_col: s
             "_fs_shard",
             F.pmod(F.col("_fs_bid"), F.lit(_FIRST_SEEN_SHARDS)).cast("long"),
         )
-        fold_fn = update
+        fold_fn = step
     else:
         sharded = stream_df.withColumn(
             "_fs_bkey", F.encode(F.col(bucket_col).cast("string"), "UTF-8")
@@ -488,10 +450,8 @@ def first_seen_flags(stream_df: DataFrame, band_col: str = "band", bucket_col: s
             F.pmod(F.xxhash64(F.col(bucket_col).cast("string")),
                    F.lit(_FIRST_SEEN_SHARDS)).cast("long"),
         )
-        fold_fn = update_bytes
-    return sharded.groupBy(band_col, "_fs_shard").applyInPandasWithState(
-        fold_fn, _FIRST_SEEN_OUT, _FIRST_SEEN_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+        fold_fn = step_bytes
+    return keyed_fold(sharded, [band_col, "_fs_shard"], _FIRST_SEEN_OUT, fold_fn)
 
 
 # ---------------------------------------------------------------------------
@@ -504,9 +464,6 @@ _SHARD_OUT = StructType(
         StructField("seq", LongType()),
         StructField("counters", BinaryType()),
     ]
-)
-_SHARD_STATE = StructType(
-    [StructField("counters", BinaryType()), StructField("seq", LongType())]
 )
 
 
@@ -532,26 +489,13 @@ def sharded_counter_state(stream_df: DataFrame, shard_bits: int = 10) -> DataFra
     """
     width = 1 << shard_bits
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, counters, batch, seq):
         shard = int(key[0])
-        base = shard << shard_bits
-        pos_parts, d_parts = [], []
-        for pdf in pdfs:
-            pos_parts.append(pdf["pos"].to_numpy(dtype=np.int64))
-            d_parts.append(pdf["d"].to_numpy(dtype=np.int64))
-        if state.exists:
-            counters_b, seq = state.get
-            counters = np.frombuffer(counters_b, dtype=np.int64).copy()
-        else:
-            counters, seq = np.zeros(width, dtype=np.int64), 0
-        if pos_parts:
-            pos = np.concatenate(pos_parts) - base
-            np.add.at(counters, pos, np.concatenate(d_parts))
-        seq += 1
-        state.update((counters.tobytes(), int(seq)))
-        yield pd.DataFrame(
+        if counters is None:
+            counters = np.zeros(width, dtype=np.int64)
+        pos = batch["pos"].to_numpy(dtype=np.int64) - (shard << shard_bits)
+        np.add.at(counters, pos, batch["d"].to_numpy(dtype=np.int64))
+        return counters, pd.DataFrame(
             {
                 "shard": np.array([shard], dtype=np.int64),
                 "seq": np.array([seq], dtype=np.int64),
@@ -559,9 +503,7 @@ def sharded_counter_state(stream_df: DataFrame, shard_bits: int = 10) -> DataFra
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _SHARD_OUT, _SHARD_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _SHARD_OUT, step)
 
 
 # ---------------------------------------------------------------------------
@@ -570,13 +512,6 @@ def sharded_counter_state(stream_df: DataFrame, shard_bits: int = 10) -> DataFra
 # deterministic generation rotation instead of probabilistic decrement).
 
 _GENB_OUT = StructType([StructField("event_id", LongType())])
-_GENB_STATE = StructType(
-    [
-        StructField("cur_gen", LongType()),
-        StructField("cur", BinaryType()),
-        StructField("prev", BinaryType()),
-    ]
-)
 
 
 def generational_bloom_dedup(
@@ -609,23 +544,11 @@ def generational_bloom_dedup(
     def fresh() -> NumpyBloom:
         return NumpyBloom.from_params(expected_items, fpp, seed)
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        parts = list(pdfs)
-        empty = np.array([], dtype=np.int64)
-        if not parts:
-            yield pd.DataFrame({"event_id": empty})
-            return
-        pdf = pd.concat(parts, ignore_index=True).sort_values("event_id")
-        if state.exists:
-            cur_gen, cur_b, prev_b = state.get
-            cur_gen = int(cur_gen)
-            cur = NumpyBloom.from_bytes(bytes(cur_b))
-            prev = NumpyBloom.from_bytes(bytes(prev_b))
-        else:
-            cur_gen = int(pdf["ts_us"].iloc[0]) // window_us
-            cur, prev = fresh(), fresh()
+    def step(key, acc, batch, _seq):
+        pdf = batch.sort_values("event_id")
+        cur_gen, cur, prev = acc or (
+            int(pdf["ts_us"].iloc[0]) // window_us, fresh(), fresh()
+        )
         flagged = []
         for g, grp in pdf.groupby(pdf["ts_us"] // window_us, sort=True):
             g = int(g)
@@ -642,13 +565,9 @@ def generational_bloom_dedup(
             in_group = grp["h"].duplicated(keep="first").to_numpy()
             cur.add_longs(hs)
             flagged.append(grp.loc[state_hit | in_group, "event_id"].to_numpy(np.int64))
-        state.update((int(cur_gen), cur.to_bytes(), prev.to_bytes()))
-        out = np.concatenate(flagged) if flagged else empty
-        yield pd.DataFrame({"event_id": out})
+        return (cur_gen, cur, prev), pd.DataFrame({"event_id": np.concatenate(flagged)})
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _GENB_OUT, _GENB_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _GENB_OUT, step)
 
 
 # ---------------------------------------------------------------------------
@@ -663,14 +582,6 @@ _GENK_OUT = StructType(
         StructField("cur_gen", LongType()),
         StructField("n_window", LongType()),
         StructField("n_cur", LongType()),
-    ]
-)
-_GENK_STATE = StructType(
-    [
-        StructField("cur_gen", LongType()),
-        StructField("seq", LongType()),
-        StructField("cur", BinaryType()),
-        StructField("prev", BinaryType()),
     ]
 )
 
@@ -705,26 +616,12 @@ def generational_kmv_distinct(
     ``max_by(..., seq)`` reads each shard's LAST emission.
     """
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, acc, batch, seq):
         empty64 = np.array([], dtype=np.int64)
-        parts = list(pdfs)
-        if not parts:
-            yield pd.DataFrame(
-                {c: empty64 for c in ("shard", "seq", "cur_gen", "n_window", "n_cur")}
-            )
-            return
-        pdf = pd.concat(parts, ignore_index=True).sort_values("event_id")
-        if state.exists:
-            cur_gen, seq, cur_b, prev_b = state.get
-            cur_gen, seq = int(cur_gen), int(seq)
-            cur = np.frombuffer(cur_b, dtype=np.int64).copy()
-            prev = np.frombuffer(prev_b, dtype=np.int64).copy()
-        else:
-            cur_gen = int(pdf["ts_us"].iloc[0]) // window_us
-            seq = 0
-            cur, prev = empty64, empty64
+        pdf = batch.sort_values("event_id")
+        cur_gen, cur, prev = acc or (
+            int(pdf["ts_us"].iloc[0]) // window_us, empty64, empty64
+        )
         for g, grp in pdf.groupby(pdf["ts_us"] // window_us, sort=True):
             g = int(g)
             if g > cur_gen:
@@ -733,8 +630,6 @@ def generational_kmv_distinct(
                 cur_gen = g
             hs = grp["h"].to_numpy(dtype=np.int64)
             cur = np.unique(np.concatenate([cur, hs]))[:k]
-        seq += 1
-        state.update((int(cur_gen), int(seq), cur.tobytes(), prev.tobytes()))
         # a set is a candidate for the KMV estimator only once it has ever
         # hit the truncation cap; the union of two bottom-k sets, re-cut to
         # its k smallest, is itself a valid bottom-k sketch of the union
@@ -742,7 +637,7 @@ def generational_kmv_distinct(
         win = np.union1d(cur, prev)
         if sat_cur or sat_prev:
             win = win[:k]
-        yield pd.DataFrame(
+        return (cur_gen, cur, prev), pd.DataFrame(
             {
                 "shard": np.array([int(key[0])], dtype=np.int64),
                 "seq": np.array([seq], dtype=np.int64),
@@ -754,9 +649,7 @@ def generational_kmv_distinct(
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _GENK_OUT, _GENK_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _GENK_OUT, step)
 
 
 # ---------------------------------------------------------------------------
@@ -765,7 +658,6 @@ def generational_kmv_distinct(
 _ASOF_OUT = StructType(
     [StructField("event_id", LongType()), StructField("last_click_us", LongType())]
 )
-_ASOF_STATE = StructType([StructField("last_us", LongType())])
 
 
 def streaming_asof_last(
@@ -788,23 +680,12 @@ def streaming_asof_last(
     replay source is ts-ordered across batches.
     """
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        empty64 = np.array([], dtype=np.int64)
-        parts = list(pdfs)
-        if not parts:
-            yield pd.DataFrame(
-                {"event_id": empty64, "last_click_us": pd.array([], dtype="Int64")}
-            )
-            return
+    def step(key, last_us, batch, _seq):
         # explicit kind priority: match_kind BEFORE probe_kind at equal
         # ts_us, so the inclusive (>=) ASOF convention holds for any kind
         # pair, not just ones that happen to sort that way lexically
-        pdf = pd.concat(parts, ignore_index=True)
-        pdf["_kprio"] = (pdf[kind_col] != match_kind).astype(np.int8)
+        pdf = batch.assign(_kprio=(batch[kind_col] != match_kind).astype(np.int8))
         pdf = pdf.sort_values(["ts_us", "_kprio", "event_id"])
-        (last_us,) = state.get if state.exists else (None,)
         match_ts = pdf["ts_us"].where(pdf[kind_col] == match_kind).ffill()
         if last_us is not None:
             match_ts = match_ts.fillna(last_us)
@@ -812,10 +693,8 @@ def streaming_asof_last(
         out_ts = match_ts[probes]
         new_last = pdf.loc[pdf[kind_col] == match_kind, "ts_us"]
         if len(new_last):
-            state.update((int(new_last.iloc[-1]),))
-        elif last_us is not None:
-            state.update((int(last_us),))
-        yield pd.DataFrame(
+            last_us = int(new_last.iloc[-1])
+        return last_us, pd.DataFrame(
             {
                 "event_id": pdf.loc[probes, "event_id"].to_numpy(np.int64),
                 "last_click_us": pd.array(
@@ -824,9 +703,7 @@ def streaming_asof_last(
             }
         )
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update, _ASOF_OUT, _ASOF_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, [key_col], _ASOF_OUT, step)
 
 
 # ---------------------------------------------------------------------------
@@ -835,13 +712,6 @@ def streaming_asof_last(
 
 _RANGE_OUT = StructType(
     [StructField("event_id", LongType()), StructField("purchases_7d", LongType())]
-)
-_RANGE_STATE = StructType(
-    [
-        StructField("ids", BinaryType()),
-        StructField("ts", BinaryType()),
-        StructField("cnt", BinaryType()),
-    ]
 )
 
 
@@ -865,22 +735,10 @@ def streaming_range_counts(
     plans/relational.py:range_join_purchases_after_signup.
     """
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, acc, batch, _seq):
         empty64 = np.array([], dtype=np.int64)
-        parts = list(pdfs)
-        if not parts:
-            yield pd.DataFrame({"event_id": empty64, "purchases_7d": empty64})
-            return
-        pdf = pd.concat(parts, ignore_index=True).sort_values(["ts_us", "event_id"])
-        if state.exists:
-            ids_b, ts_b, cnt_b = state.get
-            ids = np.frombuffer(ids_b, dtype=np.int64).copy()
-            tss = np.frombuffer(ts_b, dtype=np.int64).copy()
-            cnt = np.frombuffer(cnt_b, dtype=np.int64).copy()
-        else:
-            ids, tss, cnt = empty64.copy(), empty64.copy(), empty64.copy()
+        pdf = batch.sort_values(["ts_us", "event_id"])
+        ids, tss, cnt = acc or (empty64, empty64, empty64)
         # vectorized batch apply (replaces a per-row loop): append this
         # batch's probe rows as new zero-count windows, then count each
         # window's in-horizon matches with two searchsorted calls over the
@@ -904,12 +762,9 @@ def streaming_range_counts(
         # evict closed windows AFTER emitting their final counts
         t_max = int(pdf["ts_us"].iloc[-1])
         keep = tss + horizon_us >= t_max
-        state.update((ids[keep].tobytes(), tss[keep].tobytes(), cnt[keep].tobytes()))
-        yield out
+        return (ids[keep], tss[keep], cnt[keep]), out
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update, _RANGE_OUT, _RANGE_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, [key_col], _RANGE_OUT, step)
 
 
 # ---------------------------------------------------------------------------
@@ -924,13 +779,6 @@ _DGIM_OUT = StructType(
         StructField("seq", LongType()),
         StructField("n_buckets", LongType()),
         StructField("est_window_ones", LongType()),
-    ]
-)
-_DGIM_STATE = StructType(
-    [
-        StructField("seq", LongType()),
-        StructField("ts", BinaryType()),
-        StructField("sz", BinaryType()),
     ]
 )
 
@@ -983,36 +831,13 @@ def dgim_window_count(
     long``; emits per micro-batch so ``max_by(..., seq)`` reads each
     shard's latest estimate."""
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        empty64 = np.array([], dtype=np.int64)
-        parts = list(pdfs)
-        if not parts:
-            yield pd.DataFrame(
-                {c: empty64 for c in ("shard", "seq", "n_buckets", "est_window_ones")}
-            )
-            return
-        pdf = pd.concat(parts, ignore_index=True).sort_values(["ts_us", "event_id"])
-        if state.exists:
-            seq, ts_b, sz_b = state.get
-            seq = int(seq)
-            ts = [int(v) for v in np.frombuffer(ts_b, dtype=np.int64)]
-            sz = [int(v) for v in np.frombuffer(sz_b, dtype=np.int64)]
-        else:
-            seq, ts, sz = 0, [], []
+    def step(key, acc, batch, seq):
+        pdf = batch.sort_values(["ts_us", "event_id"])
+        ts, sz = acc or ([], [])
         ones = pdf.loc[pdf[bit_col] == 1, "ts_us"].to_numpy(np.int64)
         now = int(pdf["ts_us"].iloc[-1])
         ts, sz, est = _dgim_ingest(ts, sz, ones, now, window_us, max_per_size)
-        seq += 1
-        state.update(
-            (
-                seq,
-                np.array(ts, dtype=np.int64).tobytes(),
-                np.array(sz, dtype=np.int64).tobytes(),
-            )
-        )
-        yield pd.DataFrame(
+        return (ts, sz), pd.DataFrame(
             {
                 "shard": np.array([int(key[0])], dtype=np.int64),
                 "seq": np.array([seq], dtype=np.int64),
@@ -1021,9 +846,7 @@ def dgim_window_count(
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _DGIM_OUT, _DGIM_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _DGIM_OUT, step)
 
 
 # ---------------------------------------------------------------------------
@@ -1038,13 +861,6 @@ _MG_OUT = StructType(
         StructField("seq", LongType()),
         StructField("item", StringType()),
         StructField("mg_value", LongType()),
-    ]
-)
-_MG_STATE = StructType(
-    [
-        StructField("seq", LongType()),
-        StructField("items", StringType()),
-        StructField("counts", BinaryType()),
     ]
 )
 
@@ -1062,46 +878,15 @@ def misra_gries_state(
     read the latest seq per shard and merge shard summaries by addition +
     the same reduction."""
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        empty64 = np.array([], dtype=np.int64)
-        parts = list(pdfs)
-        if not parts:
-            yield pd.DataFrame(
-                {
-                    "shard": empty64,
-                    "seq": empty64,
-                    "item": pd.Series([], dtype="object"),
-                    "mg_value": empty64,
-                }
-            )
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        if state.exists:
-            seq, items_s, cnt_b = state.get
-            seq = int(seq)
-            items = items_s.split("\x1f") if items_s else []
-            counts = dict(
-                zip(items, (int(c) for c in np.frombuffer(cnt_b, dtype=np.int64)))
-            )
-        else:
-            seq, counts = 0, {}
-        for it, c in pdf[item_col].value_counts().items():
+    def step(key, counts, batch, seq):
+        counts = counts or {}
+        for it, c in batch[item_col].value_counts().items():
             counts[it] = counts.get(it, 0) + int(c)
         if len(counts) > k:
             off = sorted(counts.values(), reverse=True)[k]
             counts = {i: v - off for i, v in counts.items() if v - off > 0}
-        seq += 1
-        order = sorted(counts)  # deterministic state + emission order
-        state.update(
-            (
-                seq,
-                "\x1f".join(order),
-                np.array([counts[i] for i in order], dtype=np.int64).tobytes(),
-            )
-        )
-        yield pd.DataFrame(
+        order = sorted(counts)  # deterministic emission order
+        return counts, pd.DataFrame(
             {
                 "shard": np.full(len(order), int(key[0]), dtype=np.int64),
                 "seq": np.full(len(order), seq, dtype=np.int64),
@@ -1110,9 +895,7 @@ def misra_gries_state(
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _MG_OUT, _MG_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _MG_OUT, step)
 
 
 # ---------------------------------------------------------------------------
@@ -1130,13 +913,6 @@ _BK_OUT = StructType(
         StructField("event_id", LongType()),
     ]
 )
-_BK_STATE = StructType(
-    [
-        StructField("seq", LongType()),
-        StructField("hs", BinaryType()),
-        StructField("ids", BinaryType()),
-    ]
-)
 
 
 def bottomk_sample_state(stream_df: DataFrame, k: int) -> DataFrame:
@@ -1148,31 +924,14 @@ def bottomk_sample_state(stream_df: DataFrame, k: int) -> DataFrame:
     ``h`` an engine-portable hash (md5-derived); emits the full current
     sample per batch, read the latest ``seq`` per shard and re-truncate."""
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, acc, batch, seq):
         empty64 = np.array([], dtype=np.int64)
-        parts = list(pdfs)
-        if not parts:
-            yield pd.DataFrame(
-                {c: empty64 for c in ("shard", "seq", "h", "event_id")}
-            )
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        if state.exists:
-            seq, hs_b, ids_b = state.get
-            seq = int(seq)
-            hs = np.frombuffer(hs_b, dtype=np.int64)
-            ids = np.frombuffer(ids_b, dtype=np.int64)
-        else:
-            seq, hs, ids = 0, empty64, empty64
-        hs = np.concatenate([hs, pdf["h"].to_numpy(np.int64)])
-        ids = np.concatenate([ids, pdf["event_id"].to_numpy(np.int64)])
+        hs, ids = acc or (empty64, empty64)
+        hs = np.concatenate([hs, batch["h"].to_numpy(np.int64)])
+        ids = np.concatenate([ids, batch["event_id"].to_numpy(np.int64)])
         order = np.lexsort((ids, hs))[:k]  # k smallest by (h, id)
         hs, ids = hs[order], ids[order]
-        seq += 1
-        state.update((seq, hs.tobytes(), ids.tobytes()))
-        yield pd.DataFrame(
+        return (hs, ids), pd.DataFrame(
             {
                 "shard": np.full(len(hs), int(key[0]), dtype=np.int64),
                 "seq": np.full(len(hs), seq, dtype=np.int64),
@@ -1181,9 +940,7 @@ def bottomk_sample_state(stream_df: DataFrame, k: int) -> DataFrame:
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _BK_OUT, _BK_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _BK_OUT, step)
 
 
 _CUSUM_OUT = StructType(
@@ -1196,9 +953,12 @@ _CUSUM_OUT = StructType(
         StructField("n_total", LongType()),
     ]
 )
-_CUSUM_STATE = StructType(
-    [StructField("days", BinaryType()), StructField("seq", LongType())]
-)
+
+
+def _fold_day_counts(days: dict, pdf: pd.DataFrame, day_col: str) -> None:
+    """Fold a batch's per-day counts into the day->count histogram."""
+    for day, c in pdf.groupby(day_col).size().items():
+        days[day] = days.get(day, 0) + int(c)
 
 
 def streaming_cusum_daily(
@@ -1216,19 +976,9 @@ def streaming_cusum_daily(
     the batch scan over the full series, which is the oracle. Ties break
     (|S'| desc, day asc), matching the batch query.
     """
-    import pickle
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            days = pickle.loads(bytes(state.get[0]))
-            seq = int(state.get[1])
-        else:
-            days, seq = {}, 0
-        for pdf in pdfs:
-            for day, c in pdf.groupby(day_col).size().items():
-                days[day] = days.get(day, 0) + int(c)
-        seq += 1
-        state.update((pickle.dumps(days, protocol=4), seq))
+    def step(key, days, batch, seq):
+        days = days or {}
+        _fold_day_counts(days, batch, day_col)
         ordered = sorted(days)
         counts = np.array([days[d] for d in ordered], dtype=np.int64)
         cum = np.cumsum(counts)
@@ -1236,7 +986,7 @@ def streaming_cusum_daily(
         n_total = np.int64(cum[-1])
         walk = d_days * cum - np.arange(1, d_days + 1, dtype=np.int64) * n_total
         best = int(np.argmax(np.abs(walk)))  # first index at the max = day asc
-        yield pd.DataFrame(
+        return days, pd.DataFrame(
             {
                 "key": [str(key[0])],
                 "seq": [seq],
@@ -1247,9 +997,7 @@ def streaming_cusum_daily(
             }
         )
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update, _CUSUM_OUT, _CUSUM_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, [key_col], _CUSUM_OUT, step)
 
 
 _SPRT_OUT = StructType(
@@ -1259,16 +1007,6 @@ _SPRT_OUT = StructType(
         StructField("n_decided", LongType()),
         StructField("k_decided", LongType()),
         StructField("llr", StringType()),  # repr() for bit-exact transport
-    ]
-)
-_SPRT_STATE = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("k", LongType()),
-        StructField("decided", StringType()),
-        StructField("n_dec", LongType()),
-        StructField("k_dec", LongType()),
-        StructField("seq", LongType()),
     ]
 )
 
@@ -1295,16 +1033,10 @@ def streaming_sprt(
     once a boundary is crossed (later batches re-emit it unchanged).
     """
 
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            n, k, decided, n_dec, k_dec, seq = state.get
-            n, k, n_dec, k_dec, seq = int(n), int(k), int(n_dec), int(k_dec), int(seq)
-        else:
-            n, k, decided, n_dec, k_dec, seq = 0, 0, "", 0, 0, 0
-        frames = [pdf for pdf in pdfs if len(pdf)]
-        seq += 1
-        if frames and not decided:
-            batch = pd.concat(frames).sort_values(order_col)
+    def step(key, acc, batch, seq):
+        n, k, decided, n_dec, k_dec = acc or (0, 0, "", 0, 0)
+        if not decided:
+            batch = batch.sort_values(order_col)
             x = batch[success_col].to_numpy(np.int64)
             k_cum = k + np.cumsum(x)
             n_cum = n + np.arange(1, len(x) + 1, dtype=np.int64)
@@ -1315,14 +1047,12 @@ def streaming_sprt(
                 decided = "accept_h1" if llr[first] >= upper else "accept_h0"
                 n_dec, k_dec = int(n_cum[first]), int(k_cum[first])
             n, k = int(n_cum[-1]), int(k_cum[-1])
-        elif frames:
-            for pdf in frames:
-                n += len(pdf)
-                k += int(pdf[success_col].sum())
-        state.update((n, k, decided, n_dec, k_dec, seq))
+        else:
+            n += len(batch)
+            k += int(batch[success_col].sum())
         out_n, out_k = (n_dec, k_dec) if decided else (n, k)
         out_llr = out_k * c1 + (out_n - out_k) * c0
-        yield pd.DataFrame(
+        return (n, k, decided, n_dec, k_dec), pd.DataFrame(
             {
                 "seq": [seq],
                 "decision": [decided or "continue"],
@@ -1332,13 +1062,7 @@ def streaming_sprt(
             }
         )
 
-    return (
-        stream_df.withColumn("g", F.lit("all"))
-        .groupBy("g")
-        .applyInPandasWithState(
-            update, _SPRT_OUT, _SPRT_STATE, "append", GroupStateTimeout.NoTimeout
-        )
-    )
+    return keyed_fold(stream_df.withColumn("g", F.lit("all")), ["g"], _SPRT_OUT, step)
 
 
 _IBLT_OUT = StructType(
@@ -1347,9 +1071,6 @@ _IBLT_OUT = StructType(
         StructField("seq", LongType()),
         StructField("blob", BinaryType()),
     ]
-)
-_IBLT_STATE = StructType(
-    [StructField("blob", BinaryType()), StructField("seq", LongType())]
 )
 
 
@@ -1362,43 +1083,28 @@ def iblt_cells_state(cell_df: DataFrame) -> DataFrame:
     counting-Bloom retraction state): updates commute, so any batch
     arrival order yields the same cells.
 
-    Emits the shard's serialized cell slice each batch; the LAST emission
+    Emits the shard's cell slice each batch as int64 rows (cell, count,
+    key-XOR, checksum-XOR) packed into one blob; the LAST emission
     (max seq) is the complete streamed-side table, ready for cell-wise
     subtraction + driver peeling against any at-rest IBLT.
     """
-    import pickle
+    def step(key, cells, batch, seq):
+        cells = cells or {}
+        cs = batch["cell"].to_numpy(np.int64)
+        ks = batch["key"].to_numpy(np.int64)
+        gs = batch["g"].to_numpy(np.int64)
+        for c, kk, g in zip(cs.tolist(), ks.tolist(), gs.tolist()):
+            cur = cells.get(c)
+            if cur is None:
+                cells[c] = [1, kk, g]
+            else:
+                cur[0] += 1
+                cur[1] ^= kk
+                cur[2] ^= g
+        blob = np.array([[c, *v] for c, v in cells.items()], dtype=np.int64).tobytes()
+        return cells, pd.DataFrame({"shard": [int(key[0])], "seq": [seq], "blob": [blob]})
 
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            cells = pickle.loads(bytes(state.get[0]))
-            seq = int(state.get[1])
-        else:
-            cells, seq = {}, 0
-        for pdf in pdfs:
-            cs = pdf["cell"].to_numpy(np.int64)
-            ks = pdf["key"].to_numpy(np.int64)
-            gs = pdf["g"].to_numpy(np.int64)
-            for c, kk, g in zip(cs.tolist(), ks.tolist(), gs.tolist()):
-                cur = cells.get(c)
-                if cur is None:
-                    cells[c] = [1, kk, g]
-                else:
-                    cur[0] += 1
-                    cur[1] ^= kk
-                    cur[2] ^= g
-        seq += 1
-        state.update((pickle.dumps(cells, protocol=4), seq))
-        yield pd.DataFrame(
-            {
-                "shard": [int(key[0])],
-                "seq": [seq],
-                "blob": [pickle.dumps(cells, protocol=4)],
-            }
-        )
-
-    return cell_df.groupBy("shard").applyInPandasWithState(
-        update, _IBLT_OUT, _IBLT_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(cell_df, ["shard"], _IBLT_OUT, step)
 
 
 _TBUCKET_OUT = StructType(
@@ -1407,15 +1113,6 @@ _TBUCKET_OUT = StructType(
         StructField("seq", LongType()),
         StructField("n_admitted", LongType()),
         StructField("n_rejected", LongType()),
-    ]
-)
-_TBUCKET_STATE = StructType(
-    [
-        StructField("bal", LongType()),
-        StructField("t", LongType()),
-        StructField("adm", LongType()),
-        StructField("rej", LongType()),
-        StructField("seq", LongType()),
     ]
 )
 
@@ -1441,30 +1138,22 @@ def token_bucket_admission(
     at its next arrival, not by timers).
     """
 
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            bal, t, adm, rej, seq = (int(v) for v in state.get)
-            fresh = False
-        else:
-            bal, t, adm, rej, seq = 0, 0, 0, 0, 0
-            fresh = True
-        frames = [pdf for pdf in pdfs if len(pdf)]
-        if frames:
-            batch = pd.concat(frames).sort_values([ts_us_col, order_col])
-            for tt in batch[ts_us_col].astype(np.int64).tolist():
-                if fresh:
-                    bal, fresh = cap_us, False
-                else:
-                    bal = min(cap_us, bal + (tt - t))
-                if bal >= cost_us:
-                    bal -= cost_us
-                    adm += 1
-                else:
-                    rej += 1
-                t = tt
-        seq += 1
-        state.update((bal, t, adm, rej, seq))
-        yield pd.DataFrame(
+    def step(key, acc, batch, seq):
+        fresh = acc is None
+        bal, t, adm, rej = acc or (0, 0, 0, 0)
+        batch = batch.sort_values([ts_us_col, order_col])
+        for tt in batch[ts_us_col].astype(np.int64).tolist():
+            if fresh:
+                bal, fresh = cap_us, False
+            else:
+                bal = min(cap_us, bal + (tt - t))
+            if bal >= cost_us:
+                bal -= cost_us
+                adm += 1
+            else:
+                rej += 1
+            t = tt
+        return (bal, t, adm, rej), pd.DataFrame(
             {
                 "key": [str(key[0])],
                 "seq": [seq],
@@ -1473,9 +1162,7 @@ def token_bucket_admission(
             }
         )
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update, _TBUCKET_OUT, _TBUCKET_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, [key_col], _TBUCKET_OUT, step)
 
 
 _INVWIN_OUT = StructType(
@@ -1485,9 +1172,6 @@ _INVWIN_OUT = StructType(
         StructField("window_count", LongType()),
         StructField("live_buckets", LongType()),
     ]
-)
-_INVWIN_STATE = StructType(
-    [StructField("buckets", BinaryType()), StructField("seq", LongType())]
 )
 
 
@@ -1506,24 +1190,15 @@ def inverse_windowed_counts(
     (window_buckets - 1), newest_bucket] — so the final emission equals a
     closed-form batch query over the same bucket arithmetic (the oracle).
     """
-    import pickle
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            buckets = pickle.loads(bytes(state.get[0]))
-            seq = int(state.get[1])
-        else:
-            buckets, seq = {}, 0
-        for pdf in pdfs:
-            for bk, c in pdf.groupby(bucket_col).size().items():
-                buckets[int(bk)] = buckets.get(int(bk), 0) + int(c)
+    def step(key, buckets, batch, seq):
+        buckets = buckets or {}
+        for bk, c in batch.groupby(bucket_col).size().items():
+            buckets[int(bk)] = buckets.get(int(bk), 0) + int(c)
         if buckets:
             horizon = max(buckets) - (window_buckets - 1)
             for bk in [b for b in buckets if b < horizon]:
                 del buckets[bk]  # the inverse reduce: slide out, subtract
-        seq += 1
-        state.update((pickle.dumps(buckets, protocol=4), seq))
-        yield pd.DataFrame(
+        return buckets, pd.DataFrame(
             {
                 "key": [str(key[0])],
                 "seq": [seq],
@@ -1532,9 +1207,7 @@ def inverse_windowed_counts(
             }
         )
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update, _INVWIN_OUT, _INVWIN_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, [key_col], _INVWIN_OUT, step)
 
 
 _EWMA_OUT = StructType(
@@ -1544,9 +1217,6 @@ _EWMA_OUT = StructType(
         StructField("ewma_raw", StringType()),  # repr() for bit-exact transport
         StructField("z_raw", StringType()),
     ]
-)
-_EWMA_STATE = StructType(
-    [StructField("days", BinaryType()), StructField("seq", LongType())]
 )
 
 
@@ -1558,19 +1228,9 @@ def streaming_ewma_chart(stream_df: DataFrame, day_col: str) -> DataFrame:
     arithmetic — bit-equal to the batch query's closed-form double sum no
     matter how batches split the stream. Control-limit z uses the same
     integer-moment expression order as the batch plan."""
-    import pickle
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            days = pickle.loads(bytes(state.get[0]))
-            seq = int(state.get[1])
-        else:
-            days, seq = {}, 0
-        for pdf in pdfs:
-            for day, c in pdf.groupby(day_col).size().items():
-                days[day] = days.get(day, 0) + int(c)
-        seq += 1
-        state.update((pickle.dumps(days, protocol=4), seq))
+    def step(key, days, batch, seq):
+        days = days or {}
+        _fold_day_counts(days, batch, day_col)
         ordered = sorted(days)
         counts = [days[d] for d in ordered]
         n = len(counts)
@@ -1585,17 +1245,11 @@ def streaming_ewma_chart(stream_df: DataFrame, day_col: str) -> DataFrame:
             z = (e - mean) / ((var * (1.0 / 3.0) * (1 - 0.25**d)) ** 0.5)
             es.append(repr(e))
             zs.append(repr(z))
-        yield pd.DataFrame(
+        return days, pd.DataFrame(
             {"seq": [seq] * n, "day": ordered, "ewma_raw": es, "z_raw": zs}
         )
 
-    return (
-        stream_df.withColumn("g", F.lit("all"))
-        .groupBy("g")
-        .applyInPandasWithState(
-            update, _EWMA_OUT, _EWMA_STATE, "append", GroupStateTimeout.NoTimeout
-        )
-    )
+    return keyed_fold(stream_df.withColumn("g", F.lit("all")), ["g"], _EWMA_OUT, step)
 
 
 # ---------------------------------------------------------------------------
@@ -1613,14 +1267,6 @@ _SS_OUT = StructType(
         StructField("item", StringType()),
         StructField("ss_count", LongType()),
         StructField("ss_err", LongType()),
-    ]
-)
-_SS_STATE = StructType(
-    [
-        StructField("seq", LongType()),
-        StructField("items", StringType()),
-        StructField("counts", BinaryType()),
-        StructField("errs", BinaryType()),
     ]
 )
 
@@ -1662,53 +1308,17 @@ def space_saving_state(
     key space, so per-shard summaries answer global queries by addition
     (counts and error bounds both add)."""
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        empty64 = np.array([], dtype=np.int64)
-        parts = list(pdfs)
-        if not parts:
-            yield pd.DataFrame(
-                {
-                    "shard": empty64,
-                    "seq": empty64,
-                    "item": pd.Series([], dtype="object"),
-                    "ss_count": empty64,
-                    "ss_err": empty64,
-                }
-            )
-            return
-        pdf = pd.concat(parts, ignore_index=True).sort_values(
-            ["ts_us", "event_id"]
-        )
-        if state.exists:
-            seq, items_s, cnt_b, err_b = state.get
-            seq = int(seq)
-            its = items_s.split("\x1f") if items_s else []
-            cnts = np.frombuffer(cnt_b, dtype=np.int64)
-            ers = np.frombuffer(err_b, dtype=np.int64)
-            counts = dict(zip(its, (int(c) for c in cnts)))
-            errs = dict(zip(its, (int(e) for e in ers)))
-        else:
-            seq, counts, errs = 0, {}, {}
-        batch_items = pdf[item_col]
+    def step(key, acc, batch, seq):
+        counts, errs = acc or ({}, {})
+        batch_items = batch.sort_values(["ts_us", "event_id"])[item_col]
         if len(set(batch_items) | set(counts)) <= k:
             for it, c in batch_items.value_counts().items():
                 counts[it] = counts.get(it, 0) + int(c)
                 errs.setdefault(it, 0)
         else:
             counts, errs = _ss_ingest(counts, errs, batch_items.tolist(), k)
-        seq += 1
         order = sorted(counts)
-        state.update(
-            (
-                seq,
-                "\x1f".join(order),
-                np.array([counts[i] for i in order], dtype=np.int64).tobytes(),
-                np.array([errs[i] for i in order], dtype=np.int64).tobytes(),
-            )
-        )
-        yield pd.DataFrame(
+        return (counts, errs), pd.DataFrame(
             {
                 "shard": np.full(len(order), int(key[0]), dtype=np.int64),
                 "seq": np.full(len(order), seq, dtype=np.int64),
@@ -1718,9 +1328,7 @@ def space_saving_state(
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _SS_OUT, _SS_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _SS_OUT, step)
 
 
 # ---------------------------------------------------------------------------
@@ -1742,16 +1350,6 @@ _OLS_OUT = StructType(
         StructField("sxy6", LongType()),
     ]
 )
-_OLS_STATE = StructType(
-    [
-        StructField("seq", LongType()),
-        StructField("n", LongType()),
-        StructField("sx", LongType()),
-        StructField("sy6", LongType()),
-        StructField("sxx", LongType()),
-        StructField("sxy6", LongType()),
-    ]
-)
 
 
 def ols_sufficient_stats(
@@ -1765,34 +1363,16 @@ def ols_sufficient_stats(
     y6 is the exact 6-decimal scaled value; emits the running sums per
     batch, the read side applies the closed form."""
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        empty64 = np.array([], dtype=np.int64)
-        parts = list(pdfs)
-        if not parts:
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series([], dtype="object"),
-                    **{c: empty64 for c in ("seq", "n", "sx", "sy6", "sxx", "sxy6")},
-                }
-            )
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        if state.exists:
-            seq, n, sx, sy6, sxx, sxy6 = (int(v) for v in state.get)
-        else:
-            seq = n = sx = sy6 = sxx = sxy6 = 0
-        x = pdf[x_col].to_numpy(np.int64)
-        y6 = pdf[y6_col].to_numpy(np.int64)
+    def step(key, acc, batch, seq):
+        n, sx, sy6, sxx, sxy6 = acc or (0, 0, 0, 0, 0)
+        x = batch[x_col].to_numpy(np.int64)
+        y6 = batch[y6_col].to_numpy(np.int64)
         n += len(x)
         sx += int(x.sum())
         sy6 += int(y6.sum())
         sxx += int((x * x).sum())
         sxy6 += int((x * y6).sum())
-        seq += 1
-        state.update((seq, n, sx, sy6, sxx, sxy6))
-        yield pd.DataFrame(
+        return (n, sx, sy6, sxx, sxy6), pd.DataFrame(
             {
                 "key": pd.Series([str(key[0])], dtype="object"),
                 "seq": np.array([seq], dtype=np.int64),
@@ -1804,9 +1384,7 @@ def ols_sufficient_stats(
             }
         )
 
-    return stream_df.groupBy("key").applyInPandasWithState(
-        update, _OLS_OUT, _OLS_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["key"], _OLS_OUT, step)
 
 
 # ---------------------------------------------------------------------------
@@ -1824,13 +1402,6 @@ _EH_OUT = StructType(
         StructField("n_buckets", LongType()),
         StructField("oldest_size", LongType()),
         StructField("est_window_sum", LongType()),
-    ]
-)
-_EH_STATE = StructType(
-    [
-        StructField("seq", LongType()),
-        StructField("ts", BinaryType()),
-        StructField("sz", BinaryType()),
     ]
 )
 
@@ -1885,48 +1456,16 @@ def eh_window_sum(
     latest estimate; per-shard estimates and their oldest-bucket error
     bounds ADD across shards."""
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        empty64 = np.array([], dtype=np.int64)
-        parts = list(pdfs)
-        if not parts:
-            yield pd.DataFrame(
-                {
-                    c: empty64
-                    for c in (
-                        "shard",
-                        "seq",
-                        "n_buckets",
-                        "oldest_size",
-                        "est_window_sum",
-                    )
-                }
-            )
-            return
-        pdf = pd.concat(parts, ignore_index=True).sort_values(["ts_us", "event_id"])
-        if state.exists:
-            seq, ts_b, sz_b = state.get
-            seq = int(seq)
-            ts = [int(v) for v in np.frombuffer(ts_b, dtype=np.int64)]
-            sz = [int(v) for v in np.frombuffer(sz_b, dtype=np.int64)]
-        else:
-            seq, ts, sz = 0, [], []
+    def step(key, acc, batch, seq):
+        pdf = batch.sort_values(["ts_us", "event_id"])
+        ts, sz = acc or ([], [])
         pos = pdf[pdf[val_col] > 0]
         arrivals = zip(
             pos["ts_us"].to_numpy(np.int64), pos[val_col].to_numpy(np.int64)
         )
         now = int(pdf["ts_us"].iloc[-1])
         ts, sz, est, oldest = _eh_ingest(ts, sz, arrivals, now, window_us, k)
-        seq += 1
-        state.update(
-            (
-                seq,
-                np.array(ts, dtype=np.int64).tobytes(),
-                np.array(sz, dtype=np.int64).tobytes(),
-            )
-        )
-        yield pd.DataFrame(
+        return (ts, sz), pd.DataFrame(
             {
                 "shard": np.array([int(key[0])], dtype=np.int64),
                 "seq": np.array([seq], dtype=np.int64),
@@ -1936,9 +1475,7 @@ def eh_window_sum(
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _EH_OUT, _EH_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _EH_OUT, step)
 
 
 # ---------------------------------------------------------------------------
@@ -1958,14 +1495,6 @@ _SBF_OUT = StructType(
         StructField("n_dups_flagged", LongType()),
         StructField("n_seen", LongType()),
         StructField("zero_frac_x1e6", LongType()),
-    ]
-)
-_SBF_STATE = StructType(
-    [
-        StructField("seq", LongType()),
-        StructField("n_seen", LongType()),
-        StructField("n_dups", LongType()),
-        StructField("cells", BinaryType()),
     ]
 )
 
@@ -2031,40 +1560,14 @@ def stable_bloom_dedup(
     event_id long, ts_us long, <key_col> long``; batches fold in
     (ts_us, event_id) order."""
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        empty64 = np.array([], dtype=np.int64)
-        parts = list(pdfs)
-        if not parts:
-            yield pd.DataFrame(
-                {
-                    c: empty64
-                    for c in (
-                        "shard",
-                        "seq",
-                        "n_dups_flagged",
-                        "n_seen",
-                        "zero_frac_x1e6",
-                    )
-                }
-            )
-            return
-        pdf = pd.concat(parts, ignore_index=True).sort_values(["ts_us", "event_id"])
-        if state.exists:
-            seq, n_seen, n_dups, cells_b = state.get
-            seq, n_seen, n_dups = int(seq), int(n_seen), int(n_dups)
-            cells = np.frombuffer(cells_b, dtype=np.int8).copy()
-        else:
-            seq, n_seen, n_dups = 0, 0, 0
-            cells = np.zeros(m, dtype=np.int8)
+    def step(key, acc, batch, seq):
+        pdf = batch.sort_values(["ts_us", "event_id"])
+        n_seen, n_dups, cells = acc or (0, 0, np.zeros(m, dtype=np.int8))
         dups, n_seen = _sbf_ingest(
             cells, pdf[key_col].to_numpy(np.int64), kh, p_dec, cell_max, n_seen
         )
         n_dups += dups
-        seq += 1
-        state.update((seq, n_seen, n_dups, cells.tobytes()))
-        yield pd.DataFrame(
+        return (n_seen, n_dups, cells), pd.DataFrame(
             {
                 "shard": np.array([int(key[0])], dtype=np.int64),
                 "seq": np.array([seq], dtype=np.int64),
@@ -2076,9 +1579,7 @@ def stable_bloom_dedup(
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _SBF_OUT, _SBF_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _SBF_OUT, step)
 
 
 # ---------------------------------------------------------------------------
@@ -2089,12 +1590,6 @@ def stable_bloom_dedup(
 _KLL_OUT = StructType(
     [
         StructField("shard", LongType()),
-        StructField("seq", LongType()),
-        StructField("sketch", BinaryType()),
-    ]
-)
-_KLL_STATE = StructType(
-    [
         StructField("seq", LongType()),
         StructField("sketch", BinaryType()),
     ]
@@ -2112,42 +1607,20 @@ def kll_quantile_state(stream_df: DataFrame, k: int = 200) -> DataFrame:
         KLLSketch,
     )
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        empty64 = np.array([], dtype=np.int64)
-        parts = list(pdfs)
-        if not parts:
-            yield pd.DataFrame(
-                {
-                    "shard": empty64,
-                    "seq": empty64,
-                    "sketch": pd.Series([], dtype="object"),
-                }
-            )
-            return
-        pdf = pd.concat(parts, ignore_index=True).sort_values(["value", "event_id"])
-        if state.exists:
-            seq, blob = state.get
-            seq = int(seq)
-            sk = KLLSketch.from_bytes(bytes(blob))
-        else:
-            seq, sk = 0, KLLSketch(k=k, seed=int(key[0]) + 1)
+    def step(key, sk, batch, seq):
+        if sk is None:
+            sk = KLLSketch(k=k, seed=int(key[0]) + 1)
+        pdf = batch.sort_values(["value", "event_id"])
         sk.add_many(pdf["value"].to_numpy(np.float64))
-        seq += 1
-        blob = sk.to_bytes()
-        state.update((seq, blob))
-        yield pd.DataFrame(
+        return sk, pd.DataFrame(
             {
                 "shard": np.array([int(key[0])], dtype=np.int64),
                 "seq": np.array([seq], dtype=np.int64),
-                "sketch": pd.Series([blob], dtype="object"),
+                "sketch": pd.Series([sk.to_bytes()], dtype="object"),
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _KLL_OUT, _KLL_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _KLL_OUT, step)
 
 
 # ---------------------------------------------------------------------------
@@ -2165,15 +1638,6 @@ _TRIEST_OUT = StructType(
         StructField("sample_size", LongType()),
         StructField("node", LongType()),
         StructField("tri_count", LongType()),
-    ]
-)
-_TRIEST_STATE = StructType(
-    [
-        StructField("seq", LongType()),
-        StructField("edges", BinaryType()),
-        StructField("counts", BinaryType()),
-        StructField("seen", BinaryType()),
-        StructField("t_seen", LongType()),
     ]
 )
 
@@ -2265,55 +1729,18 @@ def triest_triangle_state(
     can apply the unbiased scale factor. Expects ``shard long, ord long,
     code long``."""
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        empty64 = np.array([], dtype=np.int64)
-        parts = list(pdfs)
-        if not parts:
-            yield pd.DataFrame(
-                {
-                    c: empty64
-                    for c in (
-                        "shard",
-                        "seq",
-                        "t_seen",
-                        "sample_size",
-                        "node",
-                        "tri_count",
-                    )
-                }
-            )
-            return
-        pdf = pd.concat(parts, ignore_index=True).sort_values(["ord", "code"])
-        if state.exists:
-            seq, e_b, c_b, s_b, t_seen = state.get
-            seq, t_seen = int(seq), int(t_seen)
-            edges = set(int(x) for x in np.frombuffer(e_b, dtype=np.int64))
-            carr = np.frombuffer(c_b, dtype=np.int64)
-            counts = {i: int(c) for i, c in enumerate(carr) if c}
-            seen = set(int(x) for x in np.frombuffer(s_b, dtype=np.int64))
-        else:
-            seq, t_seen, edges, counts, seen = 0, 0, set(), {}, set()
+    def step(key, acc, batch, seq):
+        edges, counts, seen, t_seen = acc or (set(), {}, set(), 0)
+        pdf = batch.sort_values(["ord", "code"])
         codes = pdf["code"].drop_duplicates().to_numpy(np.int64)
         t_seen = _triest_ingest(
             edges, counts, seen, t_seen, codes, m_cap, n_nodes, seed
         )
-        seq += 1
         carr = np.zeros(n_nodes, dtype=np.int64)
         for i, c in counts.items():
             carr[i] = c
-        state.update(
-            (
-                seq,
-                np.array(sorted(edges), dtype=np.int64).tobytes(),
-                carr.tobytes(),
-                np.array(sorted(seen), dtype=np.int64).tobytes(),
-                t_seen,
-            )
-        )
         nodes = np.flatnonzero(carr)
-        yield pd.DataFrame(
+        return (edges, counts, seen, t_seen), pd.DataFrame(
             {
                 "shard": np.full(len(nodes), int(key[0]), dtype=np.int64),
                 "seq": np.full(len(nodes), seq, dtype=np.int64),
@@ -2324,9 +1751,7 @@ def triest_triangle_state(
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _TRIEST_OUT, _TRIEST_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _TRIEST_OUT, step)
 
 
 # ---------------------------------------------------------------------------
@@ -2343,14 +1768,6 @@ _ADWIN_OUT = StructType(
         StructField("window_n", LongType()),
         StructField("window_sum_x1e6", LongType()),
         StructField("n_detections", LongType()),
-    ]
-)
-_ADWIN_STATE = StructType(
-    [
-        StructField("seq", LongType()),
-        StructField("cnt", BinaryType()),
-        StructField("sm", BinaryType()),
-        StructField("ndet", LongType()),
     ]
 )
 
@@ -2420,47 +1837,14 @@ def adwin_drift_state(
     Expects ``shard long, event_id long, ts_us long, <bit_col> double``;
     batches fold in (ts_us, event_id) order."""
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        empty64 = np.array([], dtype=np.int64)
-        parts = list(pdfs)
-        if not parts:
-            yield pd.DataFrame(
-                {
-                    c: empty64
-                    for c in (
-                        "shard",
-                        "seq",
-                        "window_n",
-                        "window_sum_x1e6",
-                        "n_detections",
-                    )
-                }
-            )
-            return
-        pdf = pd.concat(parts, ignore_index=True).sort_values(["ts_us", "event_id"])
-        if state.exists:
-            seq, cnt_b, sm_b, ndet = state.get
-            seq, ndet = int(seq), int(ndet)
-            cnt = [int(v) for v in np.frombuffer(cnt_b, dtype=np.int64)]
-            sm = [float(v) for v in np.frombuffer(sm_b, dtype=np.float64)]
-        else:
-            seq, ndet, cnt, sm = 0, 0, [], []
+    def step(key, acc, batch, seq):
+        pdf = batch.sort_values(["ts_us", "event_id"])
+        cnt, sm, ndet = acc or ([], [], 0)
         cnt, sm, dets = _adwin_ingest(
             cnt, sm, pdf[bit_col].to_numpy(np.float64), m_cap, delta
         )
         ndet += dets
-        seq += 1
-        state.update(
-            (
-                seq,
-                np.array(cnt, dtype=np.int64).tobytes(),
-                np.array(sm, dtype=np.float64).tobytes(),
-                ndet,
-            )
-        )
-        yield pd.DataFrame(
+        return (cnt, sm, ndet), pd.DataFrame(
             {
                 "shard": np.array([int(key[0])], dtype=np.int64),
                 "seq": np.array([seq], dtype=np.int64),
@@ -2472,9 +1856,7 @@ def adwin_drift_state(
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _ADWIN_OUT, _ADWIN_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _ADWIN_OUT, step)
 
 
 # ---------------------------------------------------------------------------
@@ -2487,13 +1869,6 @@ def adwin_drift_state(
 _TD_OUT = StructType(
     [
         StructField("shard", LongType()),
-        StructField("seq", LongType()),
-        StructField("means", BinaryType()),
-        StructField("weights", BinaryType()),
-    ]
-)
-_TD_STATE = StructType(
-    [
         StructField("seq", LongType()),
         StructField("means", BinaryType()),
         StructField("weights", BinaryType()),
@@ -2512,33 +1887,13 @@ def tdigest_quantile_state(stream_df: DataFrame, compression: int = 100) -> Data
         TDigest,
     )
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        empty64 = np.array([], dtype=np.int64)
-        parts = list(pdfs)
-        if not parts:
-            yield pd.DataFrame(
-                {
-                    "shard": empty64,
-                    "seq": empty64,
-                    "means": pd.Series([], dtype="object"),
-                    "weights": pd.Series([], dtype="object"),
-                }
-            )
-            return
-        pdf = pd.concat(parts, ignore_index=True).sort_values(["value", "event_id"])
-        if state.exists:
-            seq, mb, wb = state.get
-            seq = int(seq)
-            td = TDigest.from_bytes(compression, bytes(mb), bytes(wb))
-        else:
-            seq, td = 0, TDigest(compression)
+    def step(key, td, batch, seq):
+        if td is None:
+            td = TDigest(compression)
+        pdf = batch.sort_values(["value", "event_id"])
         td.add_values(pdf["value"].to_numpy(np.float64))
-        seq += 1
         mb, wb = td.to_bytes()
-        state.update((seq, mb, wb))
-        yield pd.DataFrame(
+        return td, pd.DataFrame(
             {
                 "shard": np.array([int(key[0])], dtype=np.int64),
                 "seq": np.array([seq], dtype=np.int64),
@@ -2547,9 +1902,7 @@ def tdigest_quantile_state(stream_df: DataFrame, compression: int = 100) -> Data
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _TD_OUT, _TD_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _TD_OUT, step)
 
 
 _LEAFH_OUT = StructType(
@@ -2560,9 +1913,6 @@ _LEAFH_OUT = StructType(
         StructField("hr", LongType()),
         StructField("c", LongType()),
     ]
-)
-_LEAFH_STATE = StructType(
-    [StructField("hist", BinaryType()), StructField("seq", LongType())]
 )
 
 
@@ -2578,22 +1928,13 @@ def streaming_leaf_histogram(
     the same discounted-HHH lattice as the batch query — final answers
     hash-equal the batch scan. Expects a 'shard' column on the stream
     (content hash, so placement is partitioning-invariant)."""
-    import pickle
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            hist = pickle.loads(bytes(state.get[0]))
-            seq = int(state.get[1])
-        else:
-            hist, seq = {}, 0
-        for pdf in pdfs:
-            for (day, hr), c in pdf.groupby([day_col, hr_col]).size().items():
-                k = (str(day), int(hr))
-                hist[k] = hist.get(k, 0) + int(c)
-        seq += 1
-        state.update((pickle.dumps(hist, protocol=4), seq))
+    def step(key, hist, batch, seq):
+        hist = hist or {}
+        for (day, hr), c in batch.groupby([day_col, hr_col]).size().items():
+            k = (str(day), int(hr))
+            hist[k] = hist.get(k, 0) + int(c)
         keys = sorted(hist)
-        yield pd.DataFrame(
+        return hist, pd.DataFrame(
             {
                 "shard": [int(key[0])] * len(keys),
                 "seq": [seq] * len(keys),
@@ -2603,9 +1944,7 @@ def streaming_leaf_histogram(
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _LEAFH_OUT, _LEAFH_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _LEAFH_OUT, step)
 
 
 _PH_OUT = StructType(
@@ -2617,15 +1956,6 @@ _PH_OUT = StructType(
         StructField("first_alarm_day", StringType()),
     ]
 )
-_PH_STATE = StructType(
-    [StructField("days", BinaryType()), StructField("seq", LongType())]
-)
-
-
-def _ph_fold_days(days: dict, pdf: pd.DataFrame, day_col: str) -> None:
-    """Fold a batch's per-day counts into the day->count histogram."""
-    for day, c in pdf.groupby(day_col).size().items():
-        days[day] = days.get(day, 0) + int(c)
 
 
 def _ph_walk(days: dict, lam: float):
@@ -2675,20 +2005,11 @@ def streaming_page_hinkley(
     same state discipline as the streaming CUSUM), and every batch
     re-derives the PH walk from the merged histogram (see _ph_walk for
     the exact-arithmetic contract)."""
-    import pickle
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            days = pickle.loads(bytes(state.get[0]))
-            seq = int(state.get[1])
-        else:
-            days, seq = {}, 0
-        for pdf in pdfs:
-            _ph_fold_days(days, pdf, day_col)
-        seq += 1
-        state.update((pickle.dumps(days, protocol=4), seq))
+    def step(key, days, batch, seq):
+        days = days or {}
+        _fold_day_counts(days, batch, day_col)
         n_days, rounded, first_alarm = _ph_walk(days, lam)
-        yield pd.DataFrame(
+        return days, pd.DataFrame(
             {
                 "key": [str(key[0])],
                 "seq": [seq],
@@ -2698,9 +2019,7 @@ def streaming_page_hinkley(
             }
         )
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update, _PH_OUT, _PH_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, [key_col], _PH_OUT, step)
 
 
 _SCOREH_OUT = StructType(
@@ -2712,9 +2031,6 @@ _SCOREH_OUT = StructType(
         StructField("c1", LongType()),
     ]
 )
-_SCOREH_STATE = StructType(
-    [StructField("hist", BinaryType()), StructField("seq", LongType())]
-)
 
 
 def streaming_score_histogram(stream_df: DataFrame, score_col: str, y_col: str) -> DataFrame:
@@ -2725,20 +2041,11 @@ def streaming_score_histogram(stream_df: DataFrame, score_col: str, y_col: str) 
     longs per shard forever and the rank arithmetic runs on the merged
     last emissions. Expects a 'shard' column (content hash of the score,
     so each distinct score lives in exactly one shard)."""
-    import pickle
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            hist = pickle.loads(bytes(state.get[0]))
-            seq = int(state.get[1])
-        else:
-            hist, seq = {}, 0
-        for pdf in pdfs:
-            _scoreh_fold(hist, pdf, score_col, y_col)
-        seq += 1
-        state.update((pickle.dumps(hist, protocol=4), seq))
+    def step(key, hist, batch, seq):
+        hist = hist or {}
+        _scoreh_fold(hist, batch, score_col, y_col)
         keys = sorted(hist)
-        yield pd.DataFrame(
+        return hist, pd.DataFrame(
             {
                 "shard": [int(key[0])] * len(keys),
                 "seq": [seq] * len(keys),
@@ -2748,9 +2055,7 @@ def streaming_score_histogram(stream_df: DataFrame, score_col: str, y_col: str) 
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _SCOREH_OUT, _SCOREH_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _SCOREH_OUT, step)
 
 
 def _scoreh_fold(hist: dict, pdf: pd.DataFrame, score_col: str, y_col: str) -> None:
@@ -2774,20 +2079,17 @@ _MONMUX_OUT = StructType(
         StructField("first_alarm_day", StringType()),
     ]
 )
-_MONMUX_STATE = StructType(
-    [StructField("blob", BinaryType()), StructField("seq", LongType())]
-)
 
 
 def monitoring_mux_state(stream_df: DataFrame, lam: float) -> DataFrame:
-    """KEYSPACE-MULTIPLEXED monitoring state: one applyInPandasWithState
-    run maintains BOTH the (score -> (count, positives)) histogram shards
+    """KEYSPACE-MULTIPLEXED monitoring state: one keyed_fold run
+    maintains BOTH the (score -> (count, positives)) histogram shards
     AND the per-key Page-Hinkley day histograms — the write-fusion lesson
     from the release funnel applied to stateful operators. Spark allows
     one arbitrary-stateful operator per streaming query, so a composite
     monitor that needs two state layers would otherwise pay two full
     streaming runs over the same source; packing both layers into one
-    keyspace — group key (mux, gkey), update dispatching on mux — halves
+    keyspace — group key (mux, gkey), step dispatching on mux — halves
     the per-run micro-batch floor while keeping each layer's fold
     BIT-IDENTICAL (both reuse the exact fold/walk helpers of their
     standalone operators, so the funnel's oracle is unchanged).
@@ -2796,33 +2098,21 @@ def monitoring_mux_state(stream_df: DataFrame, lam: float) -> DataFrame:
     ``gkey string`` (shard id for 'h', monitor key for 'p'), ``score
     double``/``y long`` (valid on 'h' rows), ``day string`` (valid on 'p'
     rows). Emits the union schema; filter on mux and project per layer.
-    State per group stays (blob, seq) — the same O(distinct)/O(days)
+    State per group is one histogram — the same O(distinct)/O(days)
     discipline as the standalone operators."""
-    import pickle
-
-    def update(key, pdfs, state: GroupState):
+    def step(key, store, batch, seq):
         mux = str(key[0])
         gkey = str(key[1])
         if mux not in ("h", "p"):
             # a typo'd or future third layer must fail loudly, not be
             # silently folded as a PH day histogram over garbage columns
             raise ValueError(f"monitoring_mux_state: unknown mux {mux!r}")
-        if state.exists:
-            store = pickle.loads(bytes(state.get[0]))
-            seq = int(state.get[1])
-        else:
-            store, seq = {}, 0
-        for pdf in pdfs:
-            if mux == "h":
-                _scoreh_fold(store, pdf, "score", "y")
-            else:
-                _ph_fold_days(store, pdf, "day")
-        seq += 1
-        state.update((pickle.dumps(store, protocol=4), seq))
+        store = store or {}
         if mux == "h":
+            _scoreh_fold(store, batch, "score", "y")
             keys = sorted(store)
             n = len(keys)
-            yield pd.DataFrame(
+            return store, pd.DataFrame(
                 {
                     "mux": ["h"] * n,
                     "gkey": [gkey] * n,
@@ -2835,25 +2125,23 @@ def monitoring_mux_state(stream_df: DataFrame, lam: float) -> DataFrame:
                     "first_alarm_day": pd.array([None] * n, dtype=object),
                 }
             )
-        else:
-            n_days, rounded, first_alarm = _ph_walk(store, lam)
-            yield pd.DataFrame(
-                {
-                    "mux": ["p"],
-                    "gkey": [gkey],
-                    "seq": [seq],
-                    "score": pd.array([None], dtype="float64"),
-                    "c": pd.array([None], dtype="Int64"),
-                    "c1": pd.array([None], dtype="Int64"),
-                    "n_days": [n_days],
-                    "max_ph": [rounded],
-                    "first_alarm_day": [first_alarm or "none"],
-                }
-            )
+        _fold_day_counts(store, batch, "day")
+        n_days, rounded, first_alarm = _ph_walk(store, lam)
+        return store, pd.DataFrame(
+            {
+                "mux": ["p"],
+                "gkey": [gkey],
+                "seq": [seq],
+                "score": pd.array([None], dtype="float64"),
+                "c": pd.array([None], dtype="Int64"),
+                "c1": pd.array([None], dtype="Int64"),
+                "n_days": [n_days],
+                "max_ph": [rounded],
+                "first_alarm_day": [first_alarm or "none"],
+            }
+        )
 
-    return stream_df.groupBy("mux", "gkey").applyInPandasWithState(
-        update, _MONMUX_OUT, _MONMUX_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["mux", "gkey"], _MONMUX_OUT, step)
 
 
 _LC_OUT = StructType(
@@ -2863,15 +2151,6 @@ _LC_OUT = StructType(
         StructField("item", StringType()),
         StructField("lc_value", LongType()),
         StructField("lc_delta", LongType()),
-    ]
-)
-_LC_STATE = StructType(
-    [
-        StructField("seq", LongType()),
-        StructField("n_seen", LongType()),
-        StructField("items", StringType()),
-        StructField("counts", BinaryType()),
-        StructField("deltas", BinaryType()),
     ]
 )
 
@@ -2895,58 +2174,21 @@ def lossy_counting_state(
 
     w = max(1, math.ceil(1.0 / eps))
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        empty64 = np.array([], dtype=np.int64)
-        parts = list(pdfs)
-        if not parts:
-            yield pd.DataFrame(
-                {
-                    "shard": empty64,
-                    "seq": empty64,
-                    "item": pd.Series([], dtype="object"),
-                    "lc_value": empty64,
-                    "lc_delta": empty64,
-                }
-            )
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        if state.exists:
-            seq, n_seen, items_s, cnt_b, dlt_b = state.get
-            seq, n_seen = int(seq), int(n_seen)
-            items = items_s.split("\x1f") if items_s else []
-            counts = dict(
-                zip(items, (int(c) for c in np.frombuffer(cnt_b, dtype=np.int64)))
-            )
-            deltas = dict(
-                zip(items, (int(d) for d in np.frombuffer(dlt_b, dtype=np.int64)))
-            )
-        else:
-            seq, n_seen, counts, deltas = 0, 0, {}, {}
+    def step(key, acc, batch, seq):
+        n_seen, counts, deltas = acc or (0, {}, {})
         b_entry = n_seen // w  # bucket new items enter at (batch-folded)
-        for it, c in pdf[item_col].value_counts().items():
+        for it, c in batch[item_col].value_counts().items():
             if it in counts:
                 counts[it] += int(c)
             else:
                 counts[it] = int(c)
                 deltas[it] = b_entry
-        n_seen += len(pdf)
+        n_seen += len(batch)
         b_cur = n_seen // w
         for it in [i for i in counts if counts[i] + deltas[i] <= b_cur]:
             del counts[it], deltas[it]
-        seq += 1
         order = sorted(counts)
-        state.update(
-            (
-                seq,
-                n_seen,
-                "\x1f".join(order),
-                np.array([counts[i] for i in order], dtype=np.int64).tobytes(),
-                np.array([deltas[i] for i in order], dtype=np.int64).tobytes(),
-            )
-        )
-        yield pd.DataFrame(
+        return (n_seen, counts, deltas), pd.DataFrame(
             {
                 "shard": np.full(len(order), int(key[0]), dtype=np.int64),
                 "seq": np.full(len(order), seq, dtype=np.int64),
@@ -2960,9 +2202,7 @@ def lossy_counting_state(
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _LC_OUT, _LC_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _LC_OUT, step)
 
 
 _GT_OUT = StructType(
@@ -2975,9 +2215,6 @@ _GT_OUT = StructType(
         StructField("n1", LongType()),
         StructField("n2", LongType()),
     ]
-)
-_GT_STATE = StructType(
-    [StructField("counts", BinaryType()), StructField("seq", LongType())]
 )
 
 
@@ -2992,20 +2229,11 @@ def streaming_vocab_coverage(stream_df: DataFrame) -> DataFrame:
     State is O(vocabulary/shard) — it grows with DISTINCT words (Heaps-law
     sublinear), never with token volume. Expects columns source, term and a
     content-hash 'shard'."""
-    import pickle
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            counts = pickle.loads(bytes(state.get[0]))
-            seq = int(state.get[1])
-        else:
-            counts, seq = {}, 0
-        for pdf in pdfs:
-            for (src, term), c in pdf.groupby(["source", "term"]).size().items():
-                k = (str(src), str(term))
-                counts[k] = counts.get(k, 0) + int(c)
-        seq += 1
-        state.update((pickle.dumps(counts, protocol=4), seq))
+    def step(key, counts, batch, seq):
+        counts = counts or {}
+        for (src, term), c in batch.groupby(["source", "term"]).size().items():
+            k = (str(src), str(term))
+            counts[k] = counts.get(k, 0) + int(c)
         agg: dict = {}
         for (src, _term), c in counts.items():
             a = agg.setdefault(src, [0, 0, 0, 0])
@@ -3014,7 +2242,7 @@ def streaming_vocab_coverage(stream_df: DataFrame) -> DataFrame:
             a[2] += 1 if c == 1 else 0
             a[3] += 1 if c == 2 else 0
         srcs = sorted(agg)
-        yield pd.DataFrame(
+        return counts, pd.DataFrame(
             {
                 "shard": [int(key[0])] * len(srcs),
                 "seq": [seq] * len(srcs),
@@ -3026,9 +2254,7 @@ def streaming_vocab_coverage(stream_df: DataFrame) -> DataFrame:
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _GT_OUT, _GT_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _GT_OUT, step)
 
 
 _XYH_OUT = StructType(
@@ -3040,9 +2266,6 @@ _XYH_OUT = StructType(
         StructField("p", LongType()),
     ]
 )
-_XYH_STATE = StructType(
-    [StructField("hist", BinaryType()), StructField("seq", LongType())]
-)
 
 
 def streaming_xy_histogram(stream_df: DataFrame) -> DataFrame:
@@ -3053,23 +2276,14 @@ def streaming_xy_histogram(stream_df: DataFrame) -> DataFrame:
     bounded, never row bounded. Shard = content hash of x, so each
     feature value has one owner and the merged last emissions equal the
     batch groupBy exactly. Expects columns x (long), y (0/1 int), shard."""
-    import pickle
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            hist = pickle.loads(bytes(state.get[0]))
-            seq = int(state.get[1])
-        else:
-            hist, seq = {}, 0
-        for pdf in pdfs:
-            grp = pdf.groupby("x")["y"].agg(["count", "sum"])
-            for x, row in grp.iterrows():
-                c0, p0 = hist.get(int(x), (0, 0))
-                hist[int(x)] = (c0 + int(row["count"]), p0 + int(row["sum"]))
-        seq += 1
-        state.update((pickle.dumps(hist, protocol=4), seq))
+    def step(key, hist, batch, seq):
+        hist = hist or {}
+        grp = batch.groupby("x")["y"].agg(["count", "sum"])
+        for x, row in grp.iterrows():
+            c0, p0 = hist.get(int(x), (0, 0))
+            hist[int(x)] = (c0 + int(row["count"]), p0 + int(row["sum"]))
         xs = sorted(hist)
-        yield pd.DataFrame(
+        return hist, pd.DataFrame(
             {
                 "shard": [int(key[0])] * len(xs),
                 "seq": [seq] * len(xs),
@@ -3079,9 +2293,7 @@ def streaming_xy_histogram(stream_df: DataFrame) -> DataFrame:
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _XYH_OUT, _XYH_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _XYH_OUT, step)
 
 
 _TOPP_OUT = StructType(
@@ -3093,9 +2305,6 @@ _TOPP_OUT = StructType(
         StructField("priority", DoubleType()),
     ]
 )
-_TOPP_STATE = StructType(
-    [StructField("rows", BinaryType()), StructField("seq", LongType())]
-)
 
 
 def streaming_topk_priority(stream_df: DataFrame, k: int = 50) -> DataFrame:
@@ -3106,24 +2315,15 @@ def streaming_topk_priority(stream_df: DataFrame, k: int = 50) -> DataFrame:
     emissions equal the batch TakeOrdered exactly. Expects columns
     doc_id, n_chars, priority (already quantized) and a content-hash
     'shard'."""
-    import pickle
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            rows = pickle.loads(bytes(state.get[0]))
-            seq = int(state.get[1])
-        else:
-            rows, seq = [], 0
-        for pdf in pdfs:
-            rows.extend(
-                (float(p), int(d), int(c))
-                for d, c, p in zip(pdf["doc_id"], pdf["n_chars"], pdf["priority"])
-            )
+    def step(key, rows, batch, seq):
+        rows = rows or []
+        rows.extend(
+            (float(p), int(d), int(c))
+            for d, c, p in zip(batch["doc_id"], batch["n_chars"], batch["priority"])
+        )
         rows.sort(key=lambda r: (-r[0], r[1]))
         rows = rows[:k]
-        seq += 1
-        state.update((pickle.dumps(rows, protocol=4), seq))
-        yield pd.DataFrame(
+        return rows, pd.DataFrame(
             {
                 "shard": [int(key[0])] * len(rows),
                 "seq": [seq] * len(rows),
@@ -3133,6 +2333,4 @@ def streaming_topk_priority(stream_df: DataFrame, k: int = 50) -> DataFrame:
             }
         )
 
-    return stream_df.groupBy("shard").applyInPandasWithState(
-        update, _TOPP_OUT, _TOPP_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(stream_df, ["shard"], _TOPP_OUT, step)

@@ -2,8 +2,10 @@
 
 One query per family the engine is named for (Bloom, Count-Min, heavy
 hitters, counting Bloom, stateful streaming, multi-batch replay, LSH dedup,
-ANN) plus the relational flagships, each run at sf0.01 and compared exactly
-as ``tools/check_oracle.py`` compares the full registry.
+ANN) plus the relational flagships, and every other oracle-checked query
+whose plan runs through ``streaming/stateful.py:keyed_fold``, each run at
+sf0.01 and compared exactly as ``tools/check_oracle.py`` compares the full
+registry.
 """
 
 from __future__ import annotations
@@ -34,6 +36,47 @@ IDENTITY_QUERIES = [
     "knn_cosine_bruteforce",
 ]
 
+# the remaining oracle-checked queries that reach keyed_fold: every
+# stateful operator but the timeout sessionizer is covered by one of these
+# or by the identity list above
+STATEFUL_QUERIES = [
+    "stream_stateful_running_counts",
+    "stream_stateful_bloom_distinct",
+    "stream_counting_bloom_retraction",
+    "stream_generational_bloom_dedup",
+    "stream_generational_kmv_distinct",
+    "stream_asof_enrichment",
+    "stream_range_count_enrichment",
+    "stream_dgim_saturated_exact",
+    "stream_misra_gries_topk",
+    "stream_bottomk_sample",
+    "stream_cusum_changepoint",
+    "stream_sprt_early_stop",
+    "stream_iblt_replication_audit",
+    "stream_token_bucket_quota",
+    "stream_inverse_reduce_window",
+    "stream_ewma_control_chart",
+    "stream_spacesaving_topk",
+    "stream_ols_trend",
+    "stream_eh_saturated_exact",
+    "stream_sbf_decayless_exact",
+    "stream_kll_saturated_exact",
+    "stream_triest_saturated_exact",
+    "stream_adwin_stationary_exact",
+    "stream_tdigest_saturated_exact",
+    "stream_hierarchical_heavy_hitters",
+    "stream_page_hinkley",
+    "stream_roc_auc",
+    "stream_model_monitoring_funnel",
+    "stream_lossy_counting_topk",
+    "stream_vocab_coverage",
+    "stream_decision_stump",
+    "stream_priority_sample",
+    "stream_rocksdb_stateful_counts",
+    "stream_cms_join_size",
+    "stream_winnowing_contamination",
+]
+
 
 @pytest.fixture(scope="module")
 def oracle_env(sf_dir):
@@ -43,7 +86,7 @@ def oracle_env(sf_dir):
     return sf, e.queries(), e.oracle_sql(), check_oracle.duckdb_views(sf)
 
 
-@pytest.mark.parametrize("name", IDENTITY_QUERIES)
+@pytest.mark.parametrize("name", IDENTITY_QUERIES + STATEFUL_QUERIES)
 def test_identity_query_matches_oracle(spark, oracle_env, name):
     sf, queries, oracles, con = oracle_env
     assert name in oracles, f"{name} lost its oracle"
