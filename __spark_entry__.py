@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+value-hash); ``tools/check_oracle.py`` runs the same comparison locally.
 
 The engine lives in ``bloom_filters_count_min_sketch_spark_streaming_spark``;
 queries register themselves in ``plans.registry`` (one entry per implemented

@@ -1,12 +1,13 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS].
+sf0.1) on the session ``session.get_spark`` builds (local[$SPARK_GRAFT_CPUS]).
 
 Prints ONE COMPACT JSON line: {"metric": ..., "value": total_sec, "unit":
-"sec", "queries": {family: sec, ...}, "sf": ..., "n_queries": ...,
-"full": "BENCH_FULL.json"}. The per-query map outgrew the driver's output
-tail window in round 3 (BENCH_r03.json parsed:null), so the final stdout
-line now carries per-FAMILY rollups only and the complete per-query map
-(plus per-query run spread) is written to BENCH_FULL.json at the repo
+"sec", "queries": {family: sec, ...}, "sf": ..., "calibration_sec": ...,
+"n_queries": ..., "n_errors": ..., "full": "BENCH_FULL.json", "master":
+..., "default_parallelism": ..., "cpus": ..., "ram_gb": ...}. The line
+carries per-FAMILY rollups only (a per-query map outgrew a 2000-char tail
+window in round 3); the complete per-query map, with each query's run
+spread and the same host keys, is written to BENCH_FULL.json at the repo
 root.
 
 Materialization is via the noop sink (full evaluation of every column, no
@@ -15,6 +16,11 @@ already run to completion internally (their cost is the stream run).
 Streaming queries are timed min-of-3 (batch min-of-2): they dominate the
 noisy tail on this shared host (+20-40% uniform drift r2->r3), and the
 recorded spread lets a reader distinguish regression from host noise.
+
+This module owns the harness behaviour the tools share: ``warm_up``,
+``calibrate``, ``runs_for``, ``time_query`` and ``shutdown``.
+tools/retime.py, tools/profile_query.py, tools/scaling_probe.py and
+tools/scale_stress.py are command lines over them.
 """
 
 from __future__ import annotations
@@ -26,6 +32,11 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from bloom_filters_count_min_sketch_spark_streaming_spark.session import (  # noqa: E402
+    get_spark,
+    release_query_state,
+)
 
 HEADLINE = [
     # relational core
@@ -314,22 +325,20 @@ def _family(name: str) -> str:
     return "relational"
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
+def warm_up(spark, sf_dir: str) -> None:
+    """Warm every engine component the measured queries rely on, so the
+    first timed query isn't charged for one-time JVM/codegen/worker
+    startup: codegen + shuffle, the vectorized parquet reader, every
+    fixture's parquet footer, the Arrow python-worker pool (pandas UDFs
+    reuse warm workers) and the streaming engine."""
+    from pyspark.sql import functions as F
 
-    from bloom_filters_count_min_sketch_spark_streaming_spark.session import get_spark
+    from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import load
+    from bloom_filters_count_min_sketch_spark_streaming_spark.streaming.runner import (
+        run_available_now,
+        table_stream_source,
+    )
 
-    import __spark_entry__ as entrymod
-
-    spark = get_spark("bench")
-    queries = entrymod.queries()
-
-    # Warm every engine component the measured queries rely on, so the
-    # first headline query isn't charged for one-time JVM/codegen/worker
-    # startup: codegen + shuffle, the vectorized parquet reader, and the
-    # Arrow python-worker pool (pandas UDFs reuse warm workers).
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     warm = spark.read.parquet(f"{sf_dir}/nation.parquet")
     warm.groupBy("n_regionkey").count().collect()
@@ -337,15 +346,11 @@ def main() -> None:
     # cache) so the sweep's FIRST queries aren't charged the one-time
     # cold-read cost: r10's q3 ran 2.4s in-sweep (2nd position, tight
     # spread) vs 0.9s warm-isolated with identical code.
-    from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import load
-
     for _tbl in (
         "region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings",
     ):
         load(spark, sf_dir, _tbl).limit(1).collect()
-    import pandas as pd
-    from pyspark.sql import functions as F
 
     # no type hints: `from __future__ import annotations` stringifies
     # them, which pandas_udf can't evaluate
@@ -358,11 +363,6 @@ def main() -> None:
     # Warm the streaming engine too (micro-batch executor, state-store
     # machinery, memory sink): the first streaming headliner otherwise
     # pays ~2s of one-time init that belongs to the harness, not the plan.
-    from bloom_filters_count_min_sketch_spark_streaming_spark.streaming.runner import (
-        run_available_now,
-        table_stream_source,
-    )
-
     run_available_now(
         table_stream_source(spark, sf_dir, "nation", "n_nationkey", n_files=1)
         .groupBy("n_regionkey")
@@ -370,62 +370,99 @@ def main() -> None:
         "complete",
     ).collect()
 
-    # Host-speed calibration: a fixed reference workload (pure JVM
-    # hash-agg over a generated range, no I/O, engine-version-stable)
-    # timed min-of-3. The shared host's speed varies ±3x between rounds;
-    # dividing the headline total by this figure separates "the code got
-    # slower" from "the host got slower" when comparing BENCH_r{N} files.
+
+def calibrate(spark, n: int = 3) -> float:
+    """Host-speed figure: min-of-n seconds of a fixed reference workload
+    (pure JVM hash-agg over a generated range, no I/O, engine-version-
+    stable). The shared host's speed drifts; dividing a timing by this
+    figure separates "the code got slower" from "the host got slower"
+    when comparing against a record made at another time."""
     cal = []
-    for _ in range(3):
+    for _ in range(n):
         t0 = time.time()
-        spark.range(50_000_000).selectExpr("id % 97 AS k").groupBy(
-            "k"
-        ).count().collect()
+        spark.range(50_000_000).selectExpr("id % 97 AS k").groupBy("k").count().collect()
         cal.append(time.time() - t0)
-    calibration = round(min(cal), 3)
+    return round(min(cal), 3)
+
+
+def runs_for(name: str) -> int:
+    """Timed runs per query. Streaming runs carry state-store + micro-batch
+    scheduling overhead that the shared host perturbs far more than batch
+    plans: min-of-3 for streams, min-of-2 for batch."""
+    return 3 if name.startswith("stream_") else 2
+
+
+def time_query(spark, fn, sf_dir: str, runs: int) -> list[float]:
+    """Wall seconds of ``runs`` evaluations of query ``fn`` at ``sf_dir``,
+    each built afresh and materialized through the noop sink (every column
+    evaluated, no driver collect, no pruning shortcut).
+
+    The query's persisted RDDs and tmp dirs are released once, after the
+    last run (also when a run raises), outside the timed region: releasing
+    between runs could change what a repeated ``persist()`` reuses."""
+    samples = []
+    try:
+        for _ in range(runs):
+            t0 = time.time()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            samples.append(time.time() - t0)
+    finally:
+        release_query_state(spark)
+    return samples
+
+
+def shutdown(spark) -> None:
+    """Stop the session quietly, so a JSON line printed next is the LAST
+    thing on the output. JVM teardown spews a state-store RPC stack to
+    stderr, which once landed *after* the line and lost two rounds' bench
+    records: silence logging, stop the session first, and let async
+    maintenance threads finish their last gasp."""
+    spark.sparkContext.setLogLevel("OFF")
+    sys.stderr.flush()
+    try:
+        spark.stop()
+    except Exception:
+        pass  # teardown noise must not eat the record printed after it
+    time.sleep(1.0)
+    sys.stderr.flush()
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
+
+    import __spark_entry__ as entrymod
+
+    spark = get_spark("bench")
+    sc = spark.sparkContext
+    host = {
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "cpus": len(os.sched_getaffinity(0)),
+        "ram_gb": round(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30, 1),
+    }
+    queries = entrymod.queries()
+    warm_up(spark, sf_dir)
+    calibration = calibrate(spark)
     print(f"# calibration (fixed 50M-row hash-agg): {calibration}s", file=sys.stderr)
 
     # The host is shared and noisy (observed ±3x run-to-run on identical
-    # plans): time each query twice and keep the min — the standard way to
-    # report the plan's cost rather than the scheduler's mood.
+    # plans): time each query more than once and keep the min — the
+    # standard way to report the plan's cost rather than the scheduler's
+    # mood.
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     errors: dict[str, str] = {}
     for name in HEADLINE:
-        fn = queries[name]
-        # Streaming runs carry state-store + micro-batch scheduling
-        # overhead that the shared host perturbs far more than batch plans:
-        # min-of-3 for streams, min-of-2 for batch.
-        runs = 3 if name.startswith("stream_") else 2
-        samples = []
         try:
-            for _ in range(runs):
-                t0 = time.time()
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                samples.append(time.time() - t0)
+            samples = time_query(spark, queries[name], sf_dir, runs_for(name))
         except Exception as exc:  # noqa: BLE001 — one broken query must not
-            # destroy the whole bench record (the driver keeps only this
-            # run's output); record the error and keep timing the rest.
+            # destroy the whole bench record; record the error and keep
+            # timing the rest.
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
             print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
             continue
-        finally:
-            # release persist()/localCheckpoint caches the query's lazy
-            # plan kept alive — they're dead once the noop sink ran, and
-            # across 174 headliners x2-3 runs they otherwise accumulate
-            # in executor storage for the whole sweep
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for k in jmap.keySet().toArray():
-                jmap.get(k).unpersist()
-            # ...and the per-invocation tmp-parquet stage snapshots some
-            # operators write (dead once the noop sink ran; r13 leaked
-            # them — cleanup is outside the timed region)
-            from bloom_filters_count_min_sketch_spark_streaming_spark.session import (
-                release_tmp_snapshots,
-            )
-
-            release_tmp_snapshots()
         best = min(samples)
         timings[name] = round(best, 3)
         # spread = worst/best across this invocation's runs — >1.5 means
@@ -438,33 +475,8 @@ def main() -> None:
 
     total = round(sum(timings.values()), 3)
 
-    # Regression check vs the most recent driver-recorded round (stderr
-    # only — the stdout contract stays one JSON line). Ratios > 3x are
-    # flagged; the host's observed run-to-run noise is ±3x, so anything
-    # beyond that is likely a real plan regression, not scheduler mood.
-    prev = _latest_round_bench()
-    if prev:
-        prev_q = prev.get("queries", {})
-        prev_s = prev.get("spreads", {})
-        flagged = []
-        for name, t in timings.items():
-            p = prev_q.get(name)
-            if p and p > 0:
-                ps = prev_s.get(name, 1.0) or 1.0
-                base = _regression_baseline(p, ps)
-                ratio = t / base
-                if ratio > 3.0:
-                    flagged.append(
-                        f"{name}: {p}s (spread x{ps}) -> {t}s ({ratio:.1f}x)"
-                    )
-        print(
-            f"# vs {prev['file']}: total {prev.get('value')}s -> {total}s; "
-            + (f"REGRESSIONS: {'; '.join(flagged)}" if flagged else "no query >3x slower"),
-            file=sys.stderr,
-        )
-
-    # Full per-query record (the r1-r3 format plus spreads) goes to a
-    # file; the driver's tail window only needs the compact line below.
+    # Full per-query record (plus spreads) goes to a file; the stdout
+    # line below carries per-family rollups only.
     root = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(root, "BENCH_FULL.json"), "w") as fh:
         json.dump(
@@ -477,6 +489,7 @@ def main() -> None:
                 "errors": errors,
                 "sf": sf,
                 "calibration_sec": calibration,
+                **host,
             },
             fh,
             indent=1,
@@ -488,19 +501,10 @@ def main() -> None:
         key = _family(name)
         fam[key] = round(fam.get(key, 0.0) + t, 3)
 
-    # The driver parses the TAIL of combined stdout+stderr, so the JSON
-    # line must be the LAST thing emitted. JVM teardown used to spew a
-    # state-store RPC stack to stderr *after* the line (BENCH_r03/r04
-    # parsed:null): silence logging, stop the session first, and print
-    # the JSON only once teardown noise is done.
-    spark.sparkContext.setLogLevel("OFF")
-    sys.stderr.flush()
-    try:
-        spark.stop()
-    except Exception:
-        pass  # teardown noise must not eat the bench record
-    time.sleep(1.0)  # let async maintenance threads finish their last gasp
-    sys.stderr.flush()
+    # A reader parsing the TAIL of combined stdout+stderr needs the JSON
+    # line to be the LAST thing emitted: print it only once teardown noise
+    # is done.
+    shutdown(spark)
     print(
         json.dumps(
             {
@@ -513,76 +517,11 @@ def main() -> None:
                 "n_queries": len(timings),
                 "n_errors": len(errors),
                 "full": "BENCH_FULL.json",
+                **host,
             }
         ),
         flush=True,
     )
-
-
-def _regression_baseline(committed_min: float, committed_spread: float) -> float:
-    """Per-query baseline for the regression tripwire.
-
-    A committed min whose own run spread exceeded x2 was a LUCKY run, not
-    the plan's cost (the icws lesson: a committed 3.5s min at spread x4.12
-    while typical runs were ~14s burned a round-9 investigation on a
-    phantom regression). Discount such baselines by comparing against
-    min*spread — the worst run actually observed when the baseline was
-    recorded; stable baselines (spread <= x2) stay at the raw min."""
-    if committed_spread > 2.0:
-        return committed_min * committed_spread
-    return committed_min
-
-
-def _latest_round_bench() -> dict | None:
-    """Most recent full per-query bench record for the regression check.
-
-    The baseline is the COMMITTED BENCH_FULL.json (`git show
-    HEAD:BENCH_FULL.json`), not the working-tree file: every bench run
-    overwrites the working-tree copy, so an in-round rerun would otherwise
-    compare against the run just before it instead of the prior round.
-    Falls back to the working-tree file, then pre-r4 round files."""
-    import glob
-    import subprocess
-
-    root = os.path.dirname(os.path.abspath(__file__))
-    try:
-        blob = subprocess.run(
-            ["git", "-C", root, "show", "HEAD:BENCH_FULL.json"],
-            capture_output=True,
-            text=True,
-            timeout=10,
-        )
-        if blob.returncode == 0:
-            data = json.loads(blob.stdout)
-            if isinstance(data, dict) and "queries" in data:
-                return {**data, "file": "BENCH_FULL.json@HEAD"}
-    except (OSError, json.JSONDecodeError, subprocess.SubprocessError):
-        pass
-    full = os.path.join(root, "BENCH_FULL.json")
-    try:
-        with open(full) as fh:
-            data = json.load(fh)
-        if isinstance(data, dict) and "queries" in data:
-            return {**data, "file": "BENCH_FULL.json"}
-    except (OSError, json.JSONDecodeError):
-        pass
-    paths = sorted(glob.glob(os.path.join(root, "BENCH_r*.json")))
-    for path in reversed(paths):
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-            parsed = data.get("parsed", data)
-            # pre-r4 rounds stored the per-query map in the parsed line;
-            # r4+ family rollups are useless for per-query comparison
-            if (
-                isinstance(parsed, dict)
-                and isinstance(parsed.get("queries"), dict)
-                and "full" not in parsed
-            ):
-                return {**parsed, "file": os.path.basename(path)}
-        except (OSError, json.JSONDecodeError):
-            continue
-    return None
 
 
 if __name__ == "__main__":

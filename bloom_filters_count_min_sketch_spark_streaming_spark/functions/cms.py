@@ -32,7 +32,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
@@ -309,15 +309,6 @@ def cms_estimate_from_table(
         return result
 
     return df.withColumn(out, _probe(_as_long(df, col)))
-
-
-def cms_point_query_jvm(spark: SparkSession, cms_bytes: bytes, item: int) -> int:
-    """Driver-side point query through the JVM implementation (parity check)."""
-    jvm = spark._jvm  # noqa: SLF001
-    sk = jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(
-        jvm.java.io.ByteArrayInputStream(bytearray(cms_bytes))
-    )
-    return int(sk.estimateCount(item))
 
 
 def exact_vs_approx(

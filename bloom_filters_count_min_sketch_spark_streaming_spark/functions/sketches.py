@@ -49,11 +49,6 @@ def approx_distinct(df: DataFrame, col: str, rsd: float = 0.05) -> DataFrame:
     return df.agg(F.approx_count_distinct(col, rsd).alias("approx_distinct"))
 
 
-def hll_sketch(df: DataFrame, col: str) -> bytes:
-    """Build a mergeable Apache DataSketches HLL sketch (binary)."""
-    return bytes(df.agg(F.hll_sketch_agg(col).alias("sk")).head()["sk"])
-
-
 def hll_estimate(df: DataFrame, col: str) -> DataFrame:
     """Estimate distinct count by building + reading an HLL sketch."""
     return df.agg(

@@ -69,11 +69,6 @@ def quality_score(text: Column) -> Column:
     return F.greatest(F.least(score, F.lit(1.0)), F.lit(0.0))
 
 
-def fingerprint_md5(text: Column) -> Column:
-    """Deterministic content fingerprint (md5 of lowercased text)."""
-    return F.md5(F.lower(text))
-
-
 def bm25_doc_scores(docs, terms, k1: float = 1.2, b: float = 0.75):
     """BM25 (Robertson-Sparck Jones) document scores for a fixed term set:
     (doc_id, score), score = per-term-ROUNDed contributions summed as

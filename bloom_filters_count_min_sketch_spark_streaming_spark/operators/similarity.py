@@ -64,13 +64,6 @@ def _cosine_batch(a: pd.Series, b: pd.Series) -> pd.Series:
 cosine_pandas = F.pandas_udf(_cosine_batch, DoubleType())
 
 
-def with_unit_norm(df: DataFrame, vec_col: str, out: str = "unit") -> DataFrame:
-    """Pre-normalize embeddings so cosine becomes a plain dot product."""
-    v = _as_double_array(vec_col)
-    n = norm(v)
-    return df.withColumn(out, F.transform(v, lambda x: x / n))
-
-
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,

@@ -326,7 +326,7 @@ _KCORE_K = 4
 
 def _kcore_oracle() -> str:
     sql = """
-    WITH base AS (
+    WITH base AS MATERIALIZED (
       SELECT LEAST(sn, cn) AS a, GREATEST(sn, cn) AS b,
              CAST(SUM(w) AS BIGINT) AS w
       FROM (
@@ -338,15 +338,15 @@ def _kcore_oracle() -> str:
         GROUP BY 1, 2
       ) WHERE sn <> cn GROUP BY 1, 2
     ),
-    t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
+    t AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS n,
                  CAST(SUM(w) AS BIGINT) AS tot FROM base),
-    e AS (SELECT a, b FROM base CROSS JOIN t WHERE w * n * 5 >= 6 * tot),
-    sym0 AS (SELECT a AS s, b AS d FROM e UNION ALL SELECT b, a FROM e)"""
+    e AS MATERIALIZED (SELECT a, b FROM base CROSS JOIN t WHERE w * n * 5 >= 6 * tot),
+    sym0 AS MATERIALIZED (SELECT a AS s, b AS d FROM e UNION ALL SELECT b, a FROM e)"""
     for r in range(1, _KCORE_ROUNDS + 1):
         sql += f""",
-    a{r} AS (SELECT s AS v FROM sym{r - 1} GROUP BY s
+    a{r} AS MATERIALIZED (SELECT s AS v FROM sym{r - 1} GROUP BY s
              HAVING COUNT(*) >= {_KCORE_K}),
-    sym{r} AS (SELECT sym0.s, sym0.d FROM sym0
+    sym{r} AS MATERIALIZED (SELECT sym0.s, sym0.d FROM sym0
                JOIN a{r} x ON sym0.s = x.v JOIN a{r} y ON sym0.d = y.v)"""
     last, prev = _KCORE_ROUNDS, _KCORE_ROUNDS - 1
     sql += f"""

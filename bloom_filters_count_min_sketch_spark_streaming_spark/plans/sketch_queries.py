@@ -34,15 +34,15 @@ def sketch_table(
     *,
     day_expr=None,
     at_rest_name: str | None = None,
-    sf_dir: str | None = None,
 ) -> DataFrame:
     """Shared per-day BUILD stage of the mergeable-sketch-table family
     (CMS / HLL / top-k / decayed CMS / Bloom / ...): one sketch row per
     ingest day via a distributed aggregate — kilobyte rows, O(days) table
     size regardless of data volume. Returns (day, sketch).
 
-    With ``at_rest_name``, the table is written to a /tmp parquet keyed on
-    (name, sf) and read BACK, so the caller's merge stage provably
+    With ``at_rest_name``, the table is written to a parquet dir of this
+    invocation's own (``session.tmp_snapshot_dir``, deleted once the
+    query's action ran) and read BACK, so the caller's merge stage provably
     consumes the persisted bytes, not a live plan — the incremental-ingest
     architecture at 100 TB: each new partition appends one sketch row and
     global answers merge the table instead of re-reading raw history.
@@ -51,17 +51,15 @@ def sketch_table(
     and stays with the caller.
     """
     import os
-    import tempfile
+
+    from bloom_filters_count_min_sketch_spark_streaming_spark.session import tmp_snapshot_dir
 
     day = day_expr if day_expr is not None else F.to_date("ts")
     per_day = df.groupBy(day.alias("day")).agg(build_expr.alias("sketch"))
     if at_rest_name is None:
         return per_day
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"bfcms_sktab_{at_rest_name}_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    per_day.write.mode("overwrite").parquet(out)
+    out = os.path.join(tmp_snapshot_dir(f"bfcms_sktab_{at_rest_name}_"), "table.parquet")
+    per_day.write.parquet(out)
     return df.sparkSession.read.parquet(out)
 
 
@@ -456,7 +454,6 @@ def cms_sketch_table_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev,
         cms.cms_agg(ev, "event_type", eps=0.001, confidence=0.99, seed=SEED),
         at_rest_name="cms",
-        sf_dir=sf_dir,
     )
     merged = None
     for row in table.select("sketch").collect():
@@ -487,7 +484,7 @@ def hll_sketch_table_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     table instead of re-reading raw history."""
     ev = load(spark, sf_dir, "events")
     table = sketch_table(
-        ev, F.hll_sketch_agg("user_id", F.lit(12)), at_rest_name="hll", sf_dir=sf_dir
+        ev, F.hll_sketch_agg("user_id", F.lit(12)), at_rest_name="hll"
     )
     return table.agg(
         F.hll_sketch_estimate(F.hll_union_agg("sketch"))

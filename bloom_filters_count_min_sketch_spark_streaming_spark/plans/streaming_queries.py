@@ -3662,22 +3662,6 @@ def stream_numpy_cms_sketches(
     return sketches
 
 
-def stream_numpy_cms(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    key_col: str,
-    order_col: str,
-    eps: float = _JS_EPS,
-    confidence: float = _JS_CONF,
-    seed: int = _JS_SEED,
-):
-    """Single-table convenience wrapper over stream_numpy_cms_sketches."""
-    return stream_numpy_cms_sketches(
-        spark, sf_dir, [(table, key_col, order_col)], eps, confidence, seed
-    )[0]
-
-
 @query(
     "stream_cms_join_size",
     oracle="""

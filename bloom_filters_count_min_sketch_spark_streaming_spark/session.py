@@ -59,9 +59,11 @@ from contextlib import contextmanager
 # query plan lazily scans its snapshot, so the writing operator can never
 # delete it synchronously; r13 leaked these dirs (ADVICE r13 #2). Every
 # snapshot, and every bounded streaming run's checkpoint
-# (streaming/runner._ephemeral_ckpt), registers here and the sweep harnesses
-# (bench.py, tools/check_oracle.py, tools/retime.py) release between
-# queries, with an atexit sweep catching one-shot sessions.
+# (streaming/runner._ephemeral_ckpt), registers here; release_query_state
+# releases them between queries in every sweep (bench.time_query, which
+# tools/retime.py, tools/profile_query.py, tools/scaling_probe.py and
+# tools/scale_stress.py time through, and tools/check_oracle.py), with an
+# atexit sweep catching one-shot sessions.
 _TMP_SNAPSHOT_DIRS: list[str] = []
 
 
@@ -90,6 +92,22 @@ def release_tmp_snapshots() -> None:
 
 
 atexit.register(release_tmp_snapshots)
+
+
+def release_query_state(spark: SparkSession) -> None:
+    """Unpersist every persisted RDD and delete the registered tmp dirs once
+    a query's result has been materialized.
+
+    Many queries persist/localCheckpoint intermediates their lazily
+    returned plan still references, so they CANNOT unpersist before
+    returning; without sweep-level cleanup those caches accumulate in
+    executor storage across all 400+ queries. Stage snapshots and
+    streaming checkpoints are dead once the query's action ran; without
+    this a 496-query sweep leaks hundreds of tmp dirs."""
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    for k in jmap.keySet().toArray():
+        jmap.get(k).unpersist()
+    release_tmp_snapshots()
 
 
 @contextmanager

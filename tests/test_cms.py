@@ -10,8 +10,16 @@ from bloom_filters_count_min_sketch_spark_streaming_spark.functions.cms import (
     CountMinSketchTable,
     cms_build,
     cms_estimate,
-    cms_point_query_jvm,
 )
+
+
+def cms_point_query_jvm(spark, cms_bytes: bytes, item: int) -> int:
+    """Point query through the JVM's own CountMinSketch (the parity reference)."""
+    jvm = spark._jvm  # noqa: SLF001
+    sk = jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(
+        jvm.java.io.ByteArrayInputStream(bytearray(cms_bytes))
+    )
+    return int(sk.estimateCount(item))
 
 
 def _zipf_df(spark, n=50_000, keys=500):

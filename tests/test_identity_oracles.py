@@ -19,6 +19,8 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
 
 import check_oracle  # noqa: E402
 
+from bloom_filters_count_min_sketch_spark_streaming_spark.session import release_query_state  # noqa: E402
+
 IDENTITY_QUERIES = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -93,6 +95,6 @@ def test_identity_query_matches_oracle(spark, oracle_env, name):
     try:
         got = queries[name](spark, sf).toPandas()
     finally:
-        check_oracle.release_query_state(spark)
+        release_query_state(spark)
     problems = check_oracle.compare(got, con.sql(oracles[name]).df())
     assert not problems, "\n".join(problems)

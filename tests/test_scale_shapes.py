@@ -564,18 +564,3 @@ def test_aqe_coalesces_small_shuffle_partitions(spark, sf_dir):
     df.collect()
     p = df._jdf.queryExecution().executedPlan().toString()
     assert "AQEShuffleRead" in p and "coalesced" in p, p[:1200]
-
-
-def test_bench_tripwire_discounts_lucky_baselines():
-    """The regression tripwire must not compare against a committed min
-    whose own recorded spread shows it was a lucky run (the icws case:
-    committed 3.5s at spread x4.12 with typical runs ~14s), while stable
-    baselines keep the raw min."""
-    import bench
-
-    # the icws case: 14s vs a lucky 3.5s min must NOT trip (ratio vs
-    # min*spread = 14 / 14.35 < 3)
-    assert 14.0 / bench._regression_baseline(3.5, 4.12) < 3.0
-    # stable baseline: raw min is the baseline, a genuine 4x DOES trip
-    assert bench._regression_baseline(3.5, 1.3) == 3.5
-    assert 14.0 / bench._regression_baseline(3.5, 1.3) > 3.0

@@ -487,11 +487,11 @@ def test_stream_cms_counters_equal_batch_build(spark, sf_dir):
         _JS_CONF,
         _JS_EPS,
         _JS_SEED,
-        stream_numpy_cms,
+        stream_numpy_cms_sketches,
     )
 
-    streamed = stream_numpy_cms(
-        spark, sf_dir, "orders", "o_orderkey", "o_orderkey"
+    (streamed,) = stream_numpy_cms_sketches(
+        spark, sf_dir, [("orders", "o_orderkey", "o_orderkey")]
     )
     batch = cms_build_numpy(
         load(spark, sf_dir, "orders"),
@@ -506,10 +506,6 @@ def test_stream_cms_counters_equal_batch_build(spark, sf_dir):
     # the FUSED multi-table path (one streaming query, offset shard
     # ranges) must reassemble each table's sketch bit-identically too —
     # union interleaving of the two delta streams must not matter
-    from bloom_filters_count_min_sketch_spark_streaming_spark.plans.streaming_queries import (
-        stream_numpy_cms_sketches,
-    )
-
     fused_cust, fused_ord = stream_numpy_cms_sketches(
         spark,
         sf_dir,

@@ -96,26 +96,6 @@ def duckdb_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def release_query_state(spark) -> None:
-    """Unpersist every persisted RDD and delete the registered tmp dirs once
-    a query's result has been collected.
-
-    Many queries persist/localCheckpoint intermediates their lazily
-    returned plan still references, so they CANNOT unpersist before
-    returning; without sweep-level cleanup those caches accumulate in
-    executor storage across all 400+ queries. Stage snapshots and
-    streaming checkpoints are dead once the query's toPandas() ran;
-    without this a 496-query sweep leaks hundreds of tmp dirs."""
-    from bloom_filters_count_min_sketch_spark_streaming_spark.session import (
-        release_tmp_snapshots,
-    )
-
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for k in jmap.keySet().toArray():
-        jmap.get(k).unpersist()
-    release_tmp_snapshots()
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -132,13 +112,16 @@ def main() -> int:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
+    from bloom_filters_count_min_sketch_spark_streaming_spark.session import (
+        get_spark,
+        release_query_state,
+    )
+
     if args.vanilla:
         from pyspark.sql import SparkSession
 
         spark = SparkSession.builder.master("local[8]").appName("check-vanilla").getOrCreate()
     else:
-        from bloom_filters_count_min_sketch_spark_streaming_spark.session import get_spark
-
         spark = get_spark("check-oracle")
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()

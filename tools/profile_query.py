@@ -1,11 +1,12 @@
-"""Per-job/per-stage profiler for headline queries (optimization guide §1).
+"""Per-query Spark job accounting under bench.py's conditions.
 
-Runs each named query warm under bench.py's exact conditions (noop sink,
-unpersist between runs) in a UI-enabled session, then pulls the Spark UI
-REST API for per-job wall time and per-stage task/shuffle metrics. This is
-the empirical half of the guide's measure-first loop: it answers "how many
-jobs does this query launch, which stage is slow, and is the time compute,
-shuffle, or per-task overhead" without guessing from the plan.
+Runs bench.py's warmup, then times each named query with bench's timing
+loop, min of -n noop-sink runs, in a session with Spark's event log on.
+After the session stops, perfbench.trace.eventlog_metrics reads the log
+and totals, over each query's timed runs, the jobs it launched, their
+stages and tasks, executor run, CPU and GC seconds, and shuffle bytes.
+That answers how many jobs a query launches and whether its wall time is
+executor work or driver-side planning, scheduling and Python.
 
 Usage: python tools/profile_query.py [-n 2] query [query ...]
 """
@@ -13,13 +14,14 @@ Usage: python tools/profile_query.py [-n 2] query [query ...]
 from __future__ import annotations
 
 import argparse
-import json
 import os
+import shutil
 import sys
+import tempfile
 import time
-import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -29,120 +31,47 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("profile")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "true")  # the point of this tool
-        .config("spark.ui.retainedJobs", "5000")
-        .config("spark.ui.retainedStages", "5000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
-        .getOrCreate()
+    # the event log is a launch-time setting, as in perfbench/run.py's
+    # configure_env: it must be in place before the JVM starts
+    eventlog = tempfile.mkdtemp(prefix="bfcms_eventlog_")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        [
+            "--conf spark.eventLog.enabled=true",
+            f"--conf spark.eventLog.dir=file://{eventlog}",
+            "--conf spark.eventLog.rolling.enabled=false",
+            "--conf spark.eventLog.compress=false",
+            os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell"),
+        ]
     )
-    spark.sparkContext.setLogLevel("WARN")
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
+    try:
+        import bench
+        import __spark_entry__ as entrymod
+        from bloom_filters_count_min_sketch_spark_streaming_spark.session import get_spark
+        from perfbench.trace import eventlog_metrics
 
-    def rest(path: str):
-        with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/{path}") as r:
-            return json.load(r)
-
-    import __spark_entry__ as entrymod
-
-    queries = entrymod.queries()
-
-    # bench.py's warmup, abbreviated: codegen+shuffle, parquet footers,
-    # arrow python workers, streaming machinery.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import load
-
-    for _tbl in ("region", "nation", "customer", "supplier", "part", "orders",
-                 "lineitem", "events", "documents", "embeddings"):
-        load(spark, args.sf_dir, _tbl).limit(1).collect()
-    import pandas as pd  # noqa: F401
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("long")
-    def _warm_udf(s):
-        return s
-
-    spark.read.parquet(f"{args.sf_dir}/nation.parquet").select(
-        _warm_udf(F.col("n_nationkey").cast("long"))
-    ).collect()
-    if any(q.startswith("stream_") for q in args.queries):
-        from bloom_filters_count_min_sketch_spark_streaming_spark.streaming.runner import (
-            run_available_now,
-            table_stream_source,
-        )
-
-        run_available_now(
-            table_stream_source(spark, args.sf_dir, "nation", "n_nationkey", n_files=1)
-            .groupBy("n_regionkey")
-            .count(),
-            "complete",
-        ).collect()
-
-    for qname in args.queries:
-        fn = queries[qname]
-        # one untimed warm run, then timed runs; profile the LAST run.
-        samples = []
-        for i in range(args.n + 1):
-            first_job_before = max((j["jobId"] for j in rest("jobs")), default=-1)
+        spark = get_spark("profile")
+        queries = entrymod.queries()
+        bench.warm_up(spark, args.sf_dir)
+        timed = {}
+        for name in args.queries:
             t0 = time.time()
-            df = fn(spark, args.sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            if i > 0:
-                samples.append(dt)
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for k in jmap.keySet().toArray():
-                jmap.get(k).unpersist()
-            from bloom_filters_count_min_sketch_spark_streaming_spark.session import (
-                release_tmp_snapshots,
+            samples = bench.time_query(spark, queries[name], args.sf_dir, args.n)
+            timed[name] = (samples, (t0, time.time()))
+        bench.shutdown(spark)
+
+        for name, (samples, window) in timed.items():
+            m = eventlog_metrics(eventlog, [window])
+            print(
+                f"{name}: wall min {min(samples):.3f}s over {args.n} runs "
+                f"{[round(s, 3) for s in samples]}; totals over those runs: "
+                f"jobs={m['spark.jobs']:.0f} stages={m['spark.stages']:.0f} "
+                f"tasks={m['spark.tasks']:.0f} executor run={m['spark.executor_run_s']:.3f}s "
+                f"cpu={m['spark.executor_cpu_s']:.3f}s gc={m['spark.gc_s']:.3f}s "
+                f"shuffle read={m['spark.shuffle_read_bytes']:.0f}B "
+                f"write={m['spark.shuffle_write_bytes']:.0f}B"
             )
-
-            release_tmp_snapshots()
-        print(f"\n=== {qname}: warm min {min(samples):.3f}s over {args.n} runs "
-              f"(all: {[round(s, 3) for s in samples]}) ===")
-        jobs = [j for j in rest("jobs") if j["jobId"] > first_job_before]
-        jobs.sort(key=lambda j: j["jobId"])
-        stages = {s["stageId"]: s for s in rest("stages")}
-        tot_job = 0.0
-        for j in jobs:
-            sub = j["submissionTime"]
-            comp = j.get("completionTime")
-            from datetime import datetime
-
-            def ts(x):
-                return datetime.strptime(x[:23], "%Y-%m-%dT%H:%M:%S.%f").timestamp()
-
-            dur = (ts(comp) - ts(sub)) if comp else float("nan")
-            tot_job += dur
-            desc = (j.get("description") or j["name"])[:60]
-            print(f"  job {j['jobId']:>4} {dur*1000:7.0f}ms tasks={j['numCompletedTasks']:>4} "
-                  f"stages={len(j['stageIds'])} {desc}")
-            for sid in sorted(j["stageIds"]):
-                s = stages.get(sid)
-                if not s or s.get("status") == "SKIPPED":
-                    continue
-                print(
-                    f"       stage {sid:>4}: tasks={s['numCompleteTasks']:>4} "
-                    f"runTime={s['executorRunTime']:>6}ms cpu={s.get('executorCpuTime', 0)//1_000_000:>6}ms "
-                    f"shufW={s['shuffleWriteBytes']:>9} shufR={s['shuffleReadBytes']:>9} "
-                    f"in={s['inputBytes']:>9} {s['name'][:40]}"
-                )
-        print(f"  sum(job wall) = {tot_job:.3f}s vs query wall {samples[-1]:.3f}s "
-              f"(gap = driver/python/planning time)")
-
-    spark.stop()
+    finally:
+        shutil.rmtree(eventlog, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -1,10 +1,11 @@
-"""Warm re-time harness for perf-watch adjudication (CLAUDE.md: re-time
-warm before calling anything a perf problem).
+"""Warm re-time of named queries under bench.py's conditions: re-time warm
+before calling anything a perf problem.
 
-Mirrors bench.py's conditions — same session factory, same warmup, same
-noop sink, same inter-query unpersist — but runs min-of-N (default 3)
-per named query and prints a comparison against the committed
-BENCH_FULL.json min and the latest driver BENCH_r{N}.json value.
+Same session factory, warmup, calibration, noop sink and cleanup as
+bench.py (its helpers), min-of-N (default 3) per named query, compared
+against the committed BENCH_FULL.json: the raw ratio and the
+calibration-adjusted one, (warm_min / cal_now) / (committed / cal_committed),
+which separates "the plan got slower" from "the host got slower".
 
 Usage: python tools/retime.py [-n 3] name [name ...]
 """
@@ -12,12 +13,12 @@ Usage: python tools/retime.py [-n 3] name [name ...]
 from __future__ import annotations
 
 import argparse
-import glob
 import json
 import os
-import re
 import sys
-import time
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -27,111 +28,31 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    committed = {}
-    committed_cal = None
     try:
-        with open(os.path.join(os.path.dirname(__file__), "..", "BENCH_FULL.json")) as f:
-            _full = json.load(f)
-        committed = _full.get("queries", {})
-        committed_cal = _full.get("calibration_sec")
+        with open(os.path.join(REPO, "BENCH_FULL.json")) as f:
+            full = json.load(f)
     except (OSError, json.JSONDecodeError):
-        pass
-    latest = {}
+        full = {}
+    committed = full.get("queries", {})
+    committed_cal = full.get("calibration_sec")
 
-    def _round_num(path: str) -> int:
-        m = re.search(r"BENCH_r(\d+)\.json$", os.path.basename(path))
-        return int(m.group(1)) if m else -1
-
-    # numeric round sort: lexicographic would put r100 before r11
-    rounds = sorted(
-        glob.glob(os.path.join(os.path.dirname(__file__), "..", "BENCH_r*.json")),
-        key=_round_num,
-    )
-    if rounds:
-        try:
-            with open(rounds[-1]) as f:
-                latest = json.load(f).get("queries", {})
-        except (OSError, json.JSONDecodeError):
-            pass
-
-    sys.path.insert(0, os.path.abspath(os.path.join(os.path.dirname(__file__), "..")))
-    from bloom_filters_count_min_sketch_spark_streaming_spark.session import get_spark
-
+    import bench
     import __spark_entry__ as entrymod
+    from bloom_filters_count_min_sketch_spark_streaming_spark.session import get_spark
 
     spark = get_spark("retime")
     queries = entrymod.queries()
-
-    # bench.py's warmup: codegen + shuffle + parquet reader + Arrow workers
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    warm = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    warm.groupBy("n_regionkey").count().collect()
-    # same per-fixture parquet-footer warmup as bench.py: without it the
-    # first sample of a query touching a cold fixture carries the
-    # one-time footer/schema cost the bench warmup removes
-    from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import load
-
-    for _tbl in (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ):
-        load(spark, sf_dir, _tbl).limit(1).collect()
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("long")
-    def _warm_udf(s):
-        return s
-
-    warm.select(_warm_udf(F.col("n_nationkey").cast("long"))).collect()
-    from bloom_filters_count_min_sketch_spark_streaming_spark.streaming.runner import (
-        run_available_now,
-        table_stream_source,
-    )
-
-    run_available_now(
-        table_stream_source(spark, sf_dir, "nation", "n_nationkey", n_files=1)
-        .groupBy("n_regionkey")
-        .count(),
-        "complete",
-    ).collect()
-
-    cal = []
-    for _ in range(3):
-        t0 = time.time()
-        spark.range(50_000_000).selectExpr("id % 97 AS k").groupBy(
-            "k"
-        ).count().collect()
-        cal.append(time.time() - t0)
-    print(f"# calibration: {round(min(cal), 3)}s", file=sys.stderr)
+    bench.warm_up(spark, sf_dir)
+    cal_now = bench.calibrate(spark)
+    print(f"# calibration: {cal_now}s (committed record: {committed_cal}s)", file=sys.stderr)
 
     results = {}
     for name in args.names:
-        fn = queries[name]
-        samples = []
-        for _ in range(args.n):
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for k in jmap.keySet().toArray():
-            jmap.get(k).unpersist()
-        from bloom_filters_count_min_sketch_spark_streaming_spark.session import (
-            release_tmp_snapshots,
-        )
-
-        release_tmp_snapshots()
+        samples = bench.time_query(spark, queries[name], sf_dir, args.n)
         best = min(samples)
         spread = round(max(samples) / best, 2) if best > 0 else 1.0
         base = committed.get(name)
-        drv = latest.get(name)
         ratio = round(best / base, 2) if base else None
-        # Host-speed-normalized ratio: the committed record carries its own
-        # calibration, so (best/cal_now) / (base/cal_committed) separates
-        # "the plan got slower" from "the host got slower" — the number the
-        # round-by-round adjudications were computing by hand (r12/r13).
-        cal_now = min(cal)
         ratio_cal = (
             round((best / cal_now) / (base / committed_cal), 2)
             if base and committed_cal and cal_now
@@ -141,21 +62,18 @@ def main() -> None:
             "warm_min": round(best, 3),
             "spread": spread,
             "committed": base,
-            "driver_last": drv,
             "vs_committed": ratio,
             "vs_committed_cal_adj": ratio_cal,
         }
         print(
-            f"\n# {name}: warm_min={best:.3f}s spread=x{spread} "
-            f"committed={base} driver={drv} ratio={ratio} cal_adj={ratio_cal}",
+            f"# {name}: warm_min={best:.3f}s spread=x{spread} "
+            f"committed={base} ratio={ratio} cal_adj={ratio_cal}",
             file=sys.stderr,
             flush=True,
         )
 
-    spark.sparkContext.setLogLevel("OFF")
-    spark.stop()
-    time.sleep(1.0)
-    print(json.dumps({"calibration": round(min(cal), 3), "queries": results}))
+    bench.shutdown(spark)
+    print(json.dumps({"calibration": cal_now, "queries": results}))
 
 
 if __name__ == "__main__":

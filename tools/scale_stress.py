@@ -205,6 +205,7 @@ ANNOTATIONS = {
 
 
 def main() -> None:
+    import bench
     from bloom_filters_count_min_sketch_spark_streaming_spark.plans import registry
     from bloom_filters_count_min_sketch_spark_streaming_spark.session import get_spark
 
@@ -214,34 +215,22 @@ def main() -> None:
     build(spark)
     print(f"# built 10x dataset in {time.time() - t0:.1f}s at {DST}")
 
-    # Host-speed calibration, same fixed workload as bench.py: the shared
-    # host drifts ±3x between rounds, and committed stress ratios were
-    # being compared across rounds as if they were stable points (r12
-    # verdict: the TRIEST row wandered 1.4x-3.1x across re-runs). min-of-3.
-    cal = []
-    for _ in range(3):
-        t = time.time()
-        spark.range(50_000_000).selectExpr("id % 97 AS k").groupBy("k").count().collect()
-        cal.append(time.time() - t)
-    calibration = round(min(cal), 3)
-    print(f"# calibration (fixed 50M-row hash-agg): {calibration}s")
+    # Host-speed calibration, bench.py's fixed workload: the shared host
+    # drifts ±3x between rounds, and committed stress ratios were being
+    # compared across rounds as if they were stable points (r12 verdict:
+    # the TRIEST row wandered 1.4x-3.1x across re-runs).
+    calibration = bench.calibrate(spark, 3)
+    print(f"# {spark.sparkContext.master} calibration (fixed 50M-row hash-agg): {calibration}s")
 
     names = sys.argv[1:] or PROBES
     partial = bool(sys.argv[1:])
     lines = []
     for name in names:
-        # Streaming cells carry micro-batch scheduling overhead the host
-        # perturbs far more than batch plans (bench.py uses the same split).
-        runs = 3 if name.startswith("stream_") else 2
         cells = {}
         for sf_dir, tag in ((SRC, "0.1"), (DST, "x10")):
-            samples = []
-            for _ in range(runs):
-                t = time.time()
-                registry.QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                samples.append(time.time() - t)
+            samples = bench.time_query(
+                spark, registry.QUERIES[name], sf_dir, bench.runs_for(name)
+            )
             cells[tag] = (min(samples), max(samples) / min(samples))
         best_01, spr_01 = cells["0.1"]
         best_10, spr_10 = cells["x10"]
@@ -259,7 +248,7 @@ def main() -> None:
         "## 10x stress (synthetic ~sf1, tools/scale_stress.py)",
         "",
         "Fact tables replicated 10x with key shifts (dims stay dim-sized),",
-        "run on the same local[32]. A shape problem that 10x'd the work",
+        f"run on the same {spark.sparkContext.master}. A shape problem that 10x'd the work",
         "super-linearly would show here before it shows on a cluster.",
         "",
         f"This regeneration: calibration (fixed 50M-row hash-agg, min-of-3)"

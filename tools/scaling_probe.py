@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -196,6 +195,7 @@ SF_DIRS = [
 
 
 def main() -> None:
+    import bench
     from bloom_filters_count_min_sketch_spark_streaming_spark.plans import registry
     from bloom_filters_count_min_sketch_spark_streaming_spark.session import get_spark
     from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import load
@@ -204,26 +204,16 @@ def main() -> None:
     names = sys.argv[1:] or DEFAULT_PROBES
     spark = get_spark()
 
-    # Host-speed calibration, same fixed workload as bench.py/scale_stress:
-    # committed probe ratios were being read across rounds as stable points
-    # while the host drifted ±3x (r12 verdict #2/#3). Re-measured PER CELL
-    # (r13 verdict #5/#7: the session drifts over the hours a full probe
-    # takes — raw T(0.1)/T(0.001) ratios conflate host drift with scaling;
-    # each cell now carries its own calibration and the ratio column is
+    # Host-speed calibration, bench.py's fixed workload: committed probe
+    # ratios were being read across rounds as stable points while the host
+    # drifted ±3x (r12 verdict #2/#3). Re-measured PER CELL (r13 verdict
+    # #5/#7: the session drifts over the hours a full probe takes — raw
+    # T(0.1)/T(0.001) ratios conflate host drift with scaling; each cell
+    # now carries its own calibration and the ratio column is
     # calibration-adjusted). min-of-3 for the session figure, min-of-2 per
     # cell (the cell figure only normalizes its own row).
-    def _calibrate(n: int = 2) -> float:
-        c = []
-        for _ in range(n):
-            t0 = time.time()
-            spark.range(50_000_000).selectExpr("id % 97 AS k").groupBy(
-                "k"
-            ).count().collect()
-            c.append(time.time() - t0)
-        return round(min(c), 3)
-
-    calibration = _calibrate(3)
-    print(f"# calibration (fixed 50M-row hash-agg): {calibration}s", flush=True)
+    calibration = bench.calibrate(spark, 3)
+    print(f"# {spark.sparkContext.master} calibration (fixed 50M-row hash-agg): {calibration}s", flush=True)
 
     sizes = {}
     for sf, d in SF_DIRS:
@@ -231,20 +221,13 @@ def main() -> None:
             t: load(spark, d, t).count() for t in ("lineitem", "events", "documents")
         }
 
-    results: dict[str, dict[str, tuple[float, float]]] = {}
+    results: dict[str, dict[str, tuple[float, float, float]]] = {}
     for name in names:
         fn = registry.QUERIES[name]
         results[name] = {}
-        # streaming cells carry micro-batch scheduling overhead the host
-        # perturbs far more than batch plans: min-of-3 (bench.py's split)
-        runs = 3 if name.startswith("stream_") else 2
         for sf, d in SF_DIRS:
-            cell_cal = _calibrate()
-            samples = []
-            for _ in range(runs):
-                t0 = time.time()
-                fn(spark, d).write.format("noop").mode("overwrite").save()
-                samples.append(time.time() - t0)
+            cell_cal = bench.calibrate(spark, 2)
+            samples = bench.time_query(spark, fn, d, bench.runs_for(name))
             best = min(samples)
             results[name][sf] = (best, max(samples) / best if best else 1.0, cell_cal)
             print(
@@ -254,7 +237,7 @@ def main() -> None:
             )
 
     lines = [
-        "# Scaling probe (local[32], min-of-2 batch / min-of-3 streaming per cell)",
+        f"# Scaling probe ({spark.sparkContext.master}, min-of-2 batch / min-of-3 streaming per cell)",
         "",
         "Generated by `python tools/scaling_probe.py`. Data volume grows 10x",
         "per column; the last column is T(sf0.1)/T(sf0.001) against a 100x",
