@@ -19,47 +19,45 @@ kilobyte-scale sketches and final small results.
 
 __version__ = "0.1.0"
 
-from bloom_filters_count_min_sketch_spark_streaming_spark.session import get_spark  # noqa: F401
+import importlib
 
-# Public operator API — what a user of the reference engine would call.
-from bloom_filters_count_min_sketch_spark_streaming_spark.functions.bloom import (  # noqa: F401
-    BloomFilterSketch,
-    NumpyBloom,
-    bloom_build,
-    bloom_might_contain,
-)
-from bloom_filters_count_min_sketch_spark_streaming_spark.functions.cms import (  # noqa: F401
-    CountMinSketchTable,
-    NumpyCMS,
-    cms_build,
-    cms_estimate,
-    exact_vs_approx,
-)
-from bloom_filters_count_min_sketch_spark_streaming_spark.functions.sketches import (  # noqa: F401
-    approx_distinct,
-    approx_quantiles,
-    approx_top_k,
-    exact_top_k,
-    freq_items,
-    histogram,
-    hll_estimate,
-)
-from bloom_filters_count_min_sketch_spark_streaming_spark.operators.dedup import (  # noqa: F401
-    exact_dedup,
-    minhash_lsh_pairs,
-    ngram_jaccard_pairs,
-    simhash64,
-)
-from bloom_filters_count_min_sketch_spark_streaming_spark.operators.similarity import (  # noqa: F401
-    ann_lsh_topk,
-    centroids,
-    cosine_topk_bruteforce,
-    semdedup,
-)
-from bloom_filters_count_min_sketch_spark_streaming_spark.operators.bpe import (  # noqa: F401
-    train_merges as bpe_train_merges,
-)
-from bloom_filters_count_min_sketch_spark_streaming_spark.operators.dedup import (  # noqa: F401
-    duplicate_ngram_stats,
-)
-from bloom_filters_count_min_sketch_spark_streaming_spark.operators import quality  # noqa: F401
+# Public operator API — what a user of the reference engine would call —
+# imported on first access (PEP 562). Importing the package, or any module
+# in it, therefore pulls in neither pandas nor pyarrow nor every operator:
+# the Python worker daemon (daemon.py, which ``python -m`` imports through
+# this package) forks its workers from a process as small as the stock
+# one, and a worker unpickling one operator imports only that operator.
+_EXPORTS = {
+    "get_spark": "session",
+    **dict.fromkeys(("BloomFilterSketch", "NumpyBloom", "bloom_build", "bloom_might_contain"), "functions.bloom"),
+    **dict.fromkeys(
+        ("CountMinSketchTable", "NumpyCMS", "cms_build", "cms_estimate", "exact_vs_approx"), "functions.cms"
+    ),
+    **dict.fromkeys(
+        (
+            "approx_distinct", "approx_quantiles", "approx_top_k", "exact_top_k", "freq_items", "histogram",
+            "hll_estimate",
+        ),
+        "functions.sketches",
+    ),
+    **dict.fromkeys(
+        ("exact_dedup", "minhash_lsh_pairs", "ngram_jaccard_pairs", "simhash64", "duplicate_ngram_stats"),
+        "operators.dedup",
+    ),
+    **dict.fromkeys(("ann_lsh_topk", "centroids", "cosine_topk_bruteforce", "semdedup"), "operators.similarity"),
+    "bpe_train_merges": "operators.bpe",
+    "quality": "operators",
+}
+_RENAMED = {"bpe_train_merges": "train_merges"}
+__all__ = sorted(_EXPORTS)
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    module = importlib.import_module(f"{__name__}.{_EXPORTS[name]}")
+    attr = _RENAMED.get(name, name)
+    # as ``from module import attr``: an attribute, else a submodule
+    value = getattr(module, attr) if hasattr(module, attr) else importlib.import_module(f"{module.__name__}.{attr}")
+    globals()[name] = value
+    return value

@@ -392,6 +392,10 @@ def bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     on either side (asserted in tests/test_scale_shapes.py). At 100 TB
     this is the difference between re-shuffling 100 TB per join and zero."""
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_").replace("-", "_")
+    # Stable on purpose (not a tmp_snapshot_dir): the bucketed tables stay
+    # in the session catalog after the query, pointing at this location, and
+    # the layout is written once per session; a dir released after every
+    # query would make each later call rewrite both sides.
     wh = os.path.join(tempfile.gettempdir(), "bfcms_bucketed", tag)
     cust_t, ord_t = f"bfcms_bucketed_customer_{tag}", f"bfcms_bucketed_orders_{tag}"
     existing = {t.name for t in spark.catalog.listTables()}

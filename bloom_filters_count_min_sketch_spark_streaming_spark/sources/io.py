@@ -16,6 +16,8 @@ import logging
 import os
 from urllib.parse import unquote, urlparse
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
@@ -64,15 +66,17 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def input_bytes(df: DataFrame) -> int:
     """Total on-disk bytes of the files ``df`` scans, for sizing partition
     counts from input volume. 0 when the size is unknowable: a non-``file:``
-    source, or a failed stat or URI parse (logged at debug, so a broken probe
-    on a new source type is visible rather than silently wrong)."""
+    source, a plan whose files cannot be listed (``inputFiles`` raising, as
+    it does on a streaming source), or a failed stat or URI parse (logged at
+    debug, so a broken probe on a new source type is visible rather than
+    silently wrong)."""
     total = 0
     try:
         for uri in df.inputFiles():
             if not uri.startswith("file:"):
                 return 0
             total += os.path.getsize(unquote(urlparse(uri).path))
-    except (OSError, ValueError) as exc:
+    except (OSError, ValueError, Py4JJavaError, AnalysisException) as exc:
         logging.getLogger(__name__).debug("input size probe failed: %s", exc)
         return 0
     return total

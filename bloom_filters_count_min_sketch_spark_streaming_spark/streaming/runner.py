@@ -204,10 +204,11 @@ def run_available_now(
     Every state partition is a task with a fixed commit cost in each
     micro-batch, so partitions beyond the slots only queue. perfbench
     stream_state (per-key running CMS and Bloom, 8 keys, 2 micro-batches;
-    4-core host, mean of seeds 1-2) drained 70k/71k/66k/45k rows/s at
-    sp=1/2/4/8, micro-batch p50 366/362/394/599 ms. 1 or 2 win there only
-    because 8 keys' work (a few ms each) is less than a task's fixed cost;
-    state holding many keys needs every slot. At real scale size this to
+    4-core host, mean of seeds 1-2, Python workers on session.get_spark's
+    daemon) drained 51k/48k/44k/35k rows/s at sp=1/2/4/8, micro-batch p50
+    478/513/568/698 ms. 1 or 2 win there only because 8 keys' work (a few
+    ms each) is less than a task's fixed cost; state holding many keys
+    needs every slot. At real scale size this to
     state volume / executor count instead. Results are partition-count
     invariant — only the physical distribution changes.
 

@@ -333,3 +333,18 @@ def test_timestamp_nanos_canary_all_surface_forms(spark, tmp_path):
         assert "PARQUET_TYPE_ILLEGAL" in str(exc), str(exc)
     else:
         assert got_ns == expected, f"TIMESTAMP(NANOS) diverged: {got_ns}"
+
+
+def test_input_bytes_of_sources_without_listable_files(spark, sf_dir, caplog):
+    """input_bytes sizes file scans and reads 0 (logged at debug) where the
+    files cannot be listed: a streaming source's inputFiles() raises."""
+    import logging
+    import os
+
+    from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import input_bytes
+
+    assert input_bytes(load(spark, sf_dir, "orders")) == os.path.getsize(f"{sf_dir}/orders.parquet")
+    assert input_bytes(spark.range(3)) == 0
+    with caplog.at_level(logging.DEBUG, logger="bloom_filters_count_min_sketch_spark_streaming_spark.sources.io"):
+        assert input_bytes(spark.readStream.format("rate").load()) == 0
+    assert any("input size probe failed" in r.getMessage() for r in caplog.records)

@@ -194,6 +194,33 @@ SF_DIRS = [
 ]
 
 
+PROBE_HEADER = "| query | sf0.001 s"
+
+
+def merge_probe_rows(prev: str, lines: list[str]) -> tuple[str, int]:
+    """Merge the probe table of a fresh run (``lines``) into SCALING.md's
+    text ``prev``: a re-run query's row is replaced, a new query's row is
+    appended inside the table, and the table takes the fresh header, with
+    every older row (written before a column was added) padded with ``n/a``
+    cells to the fresh width. Returns the new text and the fresh row count."""
+    at = next(i for i, ln in enumerate(lines) if ln.startswith(PROBE_HEADER))
+    header, rule = lines[at], lines[at + 1]
+    width = len(header.split("|"))
+    fresh = {ln.split("|")[1].strip(): ln for ln in lines[at + 2 :] if ln.startswith("| ")}
+    n_fresh = len(fresh)
+    out = prev.rstrip("\n").split("\n")
+    start = next(i for i, ln in enumerate(out) if ln.startswith(PROBE_HEADER))
+    end = start + 2
+    while end < len(out) and out[end].startswith("| "):
+        end += 1
+    rows = []
+    for ln in out[start + 2 : end]:
+        name = ln.split("|")[1].strip()
+        rows.append(fresh.pop(name) if name in fresh else ln + " n/a |" * (width - len(ln.split("|"))))
+    out[start:end] = [header, rule, *rows, *fresh.values()]
+    return "\n".join(out) + "\n", n_fresh
+
+
 def main() -> None:
     import bench
     from bloom_filters_count_min_sketch_spark_streaming_spark.plans import registry
@@ -306,32 +333,9 @@ def main() -> None:
     if sys.argv[1:] and prev:
         # named-query run: merge fresh rows into the existing probe table
         # in place (a full rewrite would wipe every row not re-run)
-        fresh = {
-            ln.split("|")[1].strip(): ln
-            for ln in lines
-            if ln.startswith("| ")
-            and len(ln.split("|")) == 8
-            and ln.split("|")[1].strip() != "query"
-        }
-        n_fresh = len(fresh)
-        out_lines = []
-        last_row_i = -1
-        for ln in prev.rstrip("\n").split("\n"):
-            parts = ln.split("|")
-            # old probe tables have 7 columns (no cal-adj); accept both so
-            # partial re-runs can upgrade rows in place
-            if ln.startswith("| ") and len(parts) in (7, 8):
-                if parts[1].strip() in fresh:
-                    out_lines.append(fresh.pop(parts[1].strip()))
-                else:
-                    out_lines.append(ln)
-                last_row_i = len(out_lines) - 1
-            else:
-                out_lines.append(ln)
-        if fresh:  # queries with no existing row: append INSIDE the table
-            out_lines[last_row_i + 1 : last_row_i + 1] = list(fresh.values())
+        merged, n_fresh = merge_probe_rows(prev, lines)
         with open(path, "w") as f:
-            f.write("\n".join(out_lines) + "\n")
+            f.write(merged)
         print(f"# merged {n_fresh} probe row(s) into SCALING.md")
         return
     # preserve sections other tools append (e.g. scale_stress.py's
