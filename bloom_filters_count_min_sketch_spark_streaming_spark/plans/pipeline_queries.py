@@ -35,6 +35,7 @@ from bloom_filters_count_min_sketch_spark_streaming_spark.plans.registry import 
 from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import load
 from bloom_filters_count_min_sketch_spark_streaming_spark.streaming.runner import (
     _ephemeral_ckpt,
+    start_bounded,
 )
 
 # ---------------------------------------------------------------------------
@@ -684,18 +685,15 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("v").cast("long")).cast("long").alias("v_sum"),
     )
     name = f"synth_stream_{uuid.uuid4().hex[:8]}"
-    # run_available_now's shuffle sizing, inlined: 32 partitions per
-    # 100-row micro-batch is pure state-commit overhead x10 batches
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    q = (
+    writer = (
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
         .trigger(processingTime="50 milliseconds")
-        .option("checkpointLocation", _ephemeral_ckpt())
-        .start()
     )
+    # run_available_now's shuffle sizing: 32 partitions per 100-row
+    # micro-batch is pure state-commit overhead x10 batches
+    q = start_bounded(spark, writer, _ephemeral_ckpt(), shuffle_partitions=8)
     try:
         deadline = time.time() + 120
         while time.time() < deadline:
@@ -704,7 +702,6 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
                 break
             time.sleep(0.1)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
         try:
             q.stop()
             q.awaitTermination(30)

@@ -28,6 +28,7 @@ from bloom_filters_count_min_sketch_spark_streaming_spark.streaming.runner impor
     ntile_stream_source,
     run_available_now,
     run_foreach_batch,
+    start_bounded,
     table_stream_source,
 )
 
@@ -1207,15 +1208,13 @@ def statestore_reader_window_counts(spark: SparkSession, sf_dir: str) -> DataFra
     )
     ckpt = _ephemeral_ckpt()
     name = f"ssread_{abs(hash(ckpt)) % 10**8}"
-    q = (
+    writer = (
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+    start_bounded(spark, writer, ckpt).awaitTermination()
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.window.start").alias("window_start"),
@@ -1536,24 +1535,17 @@ def stream_rate_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("value").cast("long").alias("value_sum"),
     )
     name = f"rate_stream_{uuid.uuid4().hex[:8]}"
+    writer = (
+        agg.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .trigger(processingTime="50 milliseconds")
+    )
     # size the per-batch shuffle like run_available_now does — at the
     # session's 32 partitions every 1000-row micro-batch pays 32 state
-    # commits and the poll loop's own jobs compound it
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    q = None
+    # commits
+    q = start_bounded(spark, writer, _ephemeral_ckpt(), shuffle_partitions=8)
     try:
-        # start() inside the try: if it throws (checkpoint dir failure,
-        # sink name clash) the finally still restores shuffle.partitions
-        # for the rest of the shared session
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(processingTime="50 milliseconds")
-            .option("checkpointLocation", _ephemeral_ckpt())
-            .start()
-        )
         deadline = time.time() + 120
         while time.time() < deadline:
             done = spark.sql(
@@ -1564,17 +1556,14 @@ def stream_rate_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             time.sleep(0.1)
     finally:
         try:
-            if q is not None:
-                q.stop()
-                q.awaitTermination(30)
+            q.stop()
+            q.awaitTermination(30)
         except StreamingQueryException as exc:
             # stop() can surface the query's own terminal exception; the
             # results were already drained above, but don't hide it
             import sys
 
             print(f"# stream stop(): {exc}", file=sys.stderr)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
     return (
         spark.table(name)
         .select("bucket", "n", "value_sum")
@@ -3443,23 +3432,16 @@ def stream_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame
 
     out = _snapdir("bfcms_pystream_sink_")
     ckpt = _snapdir("bfcms_pystream_ckpt_")
+    writer = (
+        counts.writeStream.format("bfcms_jsondir")
+        .outputMode("complete")
+        .option("path", out)
+        .trigger(availableNow=True)
+    )
     # at the session's 32 shuffle partitions every micro-batch spins up 32
     # Python writer commits for a ~40-row aggregate; 4 keeps the
     # per-partition writer contract exercised at a sane fan-out
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            counts.writeStream.format("bfcms_jsondir")
-            .outputMode("complete")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+    start_bounded(spark, writer, ckpt, shuffle_partitions=4).awaitTermination()
     # complete mode rewrites the whole aggregate each batch: keep only the
     # files of the LAST committed batch
     batches = sorted(

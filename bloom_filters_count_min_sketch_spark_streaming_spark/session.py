@@ -89,6 +89,12 @@ def tmp_snapshot_dir(prefix: str = "bfcms_snap_", dir: str | None = None) -> str
     return d
 
 
+def is_tmp_snapshot_dir(path: str) -> bool:
+    """Whether ``path`` is a dir tmp_snapshot_dir made in this process and
+    not yet released."""
+    return os.path.normpath(path) in _TMP_SNAPSHOT_DIRS
+
+
 def release_tmp_snapshots() -> None:
     """Delete every registered snapshot and streaming-checkpoint dir (call
     AFTER the query's action: the lazily returned plan references the

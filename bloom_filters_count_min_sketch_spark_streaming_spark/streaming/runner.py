@@ -26,22 +26,32 @@ import tempfile
 import threading
 import uuid
 from collections.abc import Callable
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.types import StructType
 
-from bloom_filters_count_min_sketch_spark_streaming_spark.session import tmp_snapshot_dir
+from bloom_filters_count_min_sketch_spark_streaming_spark.session import (
+    is_tmp_snapshot_dir,
+    tmp_snapshot_dir,
+)
 from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import load
 
 
 def _ephemeral_ckpt() -> str:
     """Checkpoint dir for BOUNDED verification runs (mkdtemp'd per query,
-    never resumed): prefer the RAM-backed /dev/shm — the HDFS-backed
-    provider's write+rename commits are then memory-speed instead of
-    paying disk fsync per micro-batch per partition. Production streams
-    point checkpointLocation at durable storage (S3/HDFS); that is a
-    config choice, not a code path. Registered with the session's tmp
-    dirs, so ``session.release_tmp_snapshots()`` deletes it."""
+    one writer, never resumed), in RAM-backed /dev/shm when there is one:
+    durability buys such a checkpoint nothing. Start the run with
+    ``start_bounded``, which writes it through Spark's FileSystem-based
+    checkpoint manager: on a host whose Hadoop has no native library the
+    default FileContext-based manager forks about 10 child processes
+    (readlink, permission lookups) per checkpoint file, wherever the file
+    lives, /dev/shm included. Production streams point checkpointLocation
+    at durable storage (S3/HDFS) and keep Spark's default manager.
+    Registered with the session's tmp dirs, so
+    ``session.release_tmp_snapshots()`` deletes it."""
     root = "/dev/shm" if os.path.isdir("/dev/shm") else None
     return tmp_snapshot_dir(prefix="bfcms_ckpt_", dir=root)
 
@@ -129,6 +139,8 @@ def ntile_stream_source(
 # per-query state.
 _SPLIT_ROOT: str | None = None
 _SPLIT_LOCK = threading.Lock()
+# split dir -> its schema, inferred once when the split is written
+_SPLIT_SCHEMAS: dict[str, StructType] = {}
 
 
 def _replay_split(
@@ -153,25 +165,32 @@ def _replay_split(
             _SPLIT_ROOT = tempfile.mkdtemp(prefix="bfcms_stream_src_")
             atexit.register(shutil.rmtree, _SPLIT_ROOT, True)
         src_dir = os.path.join(_SPLIT_ROOT, key)
-        if not os.path.isdir(src_dir):
+        schema = _SPLIT_SCHEMAS.get(src_dir)
+        if schema is None:
             try:
                 write(src_dir)
+                # FileStreamSource orders files by modification time (path
+                # is only a tie-break in some code paths, and the parallel
+                # parquet write stamps all parts with the SAME mtime) — so
+                # replay order, and therefore watermark monotonicity, was a
+                # coin flip. Append-mode queries then drop whole "late"
+                # batches. Stamp strictly increasing mtimes in part-file
+                # (= range-partition / batch = time) order.
+                parts = sorted(
+                    f
+                    for f in os.listdir(src_dir)
+                    if f.startswith("part-") and f.endswith(".parquet")
+                )
+                base = 1_600_000_000  # fixed epoch: deterministic across runs
+                for i, f in enumerate(parts):
+                    os.utime(os.path.join(src_dir, f), (base + i, base + i))
+                # Read back from the split (a Spark job), not taken from
+                # the fixture, so nullability is what the files carry.
+                schema = spark.read.parquet(src_dir).schema
             except BaseException:
                 shutil.rmtree(src_dir, ignore_errors=True)  # never replay a partial split
                 raise
-    # FileStreamSource orders files by modification time (path is only a
-    # tie-break in some code paths, and the parallel parquet write stamps
-    # all parts with the SAME mtime) — so replay order, and therefore
-    # watermark monotonicity, was a coin flip. Append-mode queries then
-    # drop whole "late" batches. Stamp strictly increasing mtimes in
-    # part-file (= range-partition / batch = time) order.
-    parts = sorted(
-        f for f in os.listdir(src_dir) if f.startswith("part-") and f.endswith(".parquet")
-    )
-    base = 1_600_000_000  # fixed epoch: deterministic across runs
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(src_dir, f), (base + i, base + i))
-    schema = spark.read.parquet(src_dir).schema
+            _SPLIT_SCHEMAS[src_dir] = schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -184,6 +203,61 @@ ROCKSDB_PROVIDER = (
 )
 _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 _NODATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
+_SHUFFLE_CONF = "spark.sql.shuffle.partitions"
+_CKPT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+
+
+def start_bounded(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    ckpt: str,
+    shuffle_partitions: int | None = None,
+    conf: dict[str, str] | None = None,
+) -> StreamingQuery:
+    """Start ``writer`` on checkpoint ``ckpt`` with ``conf`` and
+    ``shuffle_partitions`` (if given) set on ``spark`` for the ``start()``
+    call only. The caller's values come back afterwards, also when
+    ``start()`` raises: a set conf to its value, an unset one unset. The
+    query keeps the values it started with, since it runs on a clone of
+    the session taken inside ``start()``.
+
+    A checkpoint this process made with ``tmp_snapshot_dir`` on the local
+    file system (``_ephemeral_ckpt``) is also written through Spark's
+    FileSystem-based checkpoint manager. Spark's default FileContext-based
+    manager, on a Hadoop without its native library, forks about 10 child
+    processes (readlink, permission lookups) per atomic checkpoint file:
+    33-37 ms and 20 new PIDs per write against 10-11 ms and 4 (4-core
+    host, 20 writes of 200 bytes to /dev/shm), paid several times per
+    micro-batch (offsets WAL, commit log, file-source log, one delta and
+    checksum file per state partition). The FileSystem-based manager's
+    atomic write is still write-temp-then-rename, and ``rename(2)`` is
+    atomic on a POSIX file system. What the default adds on stores like
+    HDFS, a rename that atomically fails if the target exists (against a
+    second writer), cannot matter in a dir one process made for one run
+    it never resumes. Any other checkpoint (durable, remote, or passed in
+    by a caller) keeps Spark's default manager. Checkpoint file checksums
+    stay as configured.
+    """
+    settings = dict(conf or {})
+    if shuffle_partitions is not None:
+        settings[_SHUFFLE_CONF] = str(shuffle_partitions)
+    url = urlparse(ckpt)
+    if url.scheme in ("", "file") and is_tmp_snapshot_dir(url.path):
+        settings[_CKPT_MANAGER_CONF] = FS_CHECKPOINT_MANAGER
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        return writer.option("checkpointLocation", ckpt).start()
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def run_available_now(
@@ -205,9 +279,11 @@ def run_available_now(
     micro-batch, so partitions beyond the slots only queue. perfbench
     stream_state (per-key running CMS and Bloom, 8 keys, 2 micro-batches;
     4-core host, mean of seeds 1-2, Python workers on session.get_spark's
-    daemon) drained 51k/48k/44k/35k rows/s at sp=1/2/4/8, micro-batch p50
-    478/513/568/698 ms. 1 or 2 win there only because 8 keys' work (a few
-    ms each) is less than a task's fixed cost; state holding many keys
+    daemon, checkpoints through start_bounded's FileSystem-based manager)
+    drained 61k/64k/61k/55k rows/s at sp=1/2/4/8, micro-batch p50
+    420/392/416/484 ms. With the per-file checkpoint cost gone, 1 to 4
+    are within run-to-run noise of each other; 8 keys' work (a few ms
+    each) is less than a task's fixed cost, and state holding many keys
     needs every slot. At real scale size this to
     state volume / executor count instead. Results are partition-count
     invariant — only the physical distribution changes.
@@ -216,48 +292,27 @@ def run_available_now(
     store (spilling, incremental-checkpoint — the 100 TB provider, where
     state outgrows executor heap); default is the HDFS-backed in-memory
     provider. The conf is read at query START and baked into the
-    checkpoint, so it's set/restored around start() here.
+    checkpoint, so it's set/restored around start() (``start_bounded``).
     """
     spark = stream_df.sparkSession
-    name = query_name or f"q_{uuid.uuid4().hex[:10]}"
-    ckpt = _ephemeral_ckpt()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(_PROVIDER_CONF, None)
-    prev_nodata = spark.conf.get(_NODATA_CONF, None)
     if state_partitions is None:
         state_partitions = spark.sparkContext.defaultParallelism
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     # The trailing no-data micro-batch exists to advance the watermark one
     # last time so append-mode windowed/join results flush. A plan with no
     # EventTimeWatermark node has nothing to flush — skip the extra batch
     # (one fewer offset/commit/state round per bounded run).
     has_watermark = "EventTimeWatermark" in stream_df._jdf.queryExecution().analyzed().toString()
-    spark.conf.set(_NODATA_CONF, "true" if has_watermark else "false")
-    if state_provider == "rocksdb":
-        spark.conf.set(_PROVIDER_CONF, ROCKSDB_PROVIDER)
-    elif state_provider is not None:
-        spark.conf.set(_PROVIDER_CONF, state_provider)
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if prev_nodata is None:
-            spark.conf.unset(_NODATA_CONF)
-        else:
-            spark.conf.set(_NODATA_CONF, prev_nodata)
-        if state_provider is not None:
-            if prev_provider is None:
-                spark.conf.unset(_PROVIDER_CONF)
-            else:
-                spark.conf.set(_PROVIDER_CONF, prev_provider)
+    conf = {_NODATA_CONF: "true" if has_watermark else "false"}
+    if state_provider is not None:
+        conf[_PROVIDER_CONF] = ROCKSDB_PROVIDER if state_provider == "rocksdb" else state_provider
+    name = query_name or f"q_{uuid.uuid4().hex[:10]}"
+    writer = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    start_bounded(spark, writer, _ephemeral_ckpt(), state_partitions, conf).awaitTermination()
     return spark.table(name)
 
 
@@ -269,14 +324,8 @@ def run_foreach_batch(stream_df: DataFrame, fn) -> int:
         fn(batch_df, batch_id)
         counter["n"] += 1
 
-    ckpt = _ephemeral_ckpt()
-    q = (
-        stream_df.writeStream.foreachBatch(_wrap)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = stream_df.writeStream.foreachBatch(_wrap).trigger(availableNow=True)
+    start_bounded(stream_df.sparkSession, writer, _ephemeral_ckpt()).awaitTermination()
     return counter["n"]
 
 

@@ -607,3 +607,145 @@ def test_stream_split_outlives_release_and_is_owned_by_the_process(spark, sf_dir
     assert sorted(os.listdir(root)) == sorted(splits)
     for d in splits:
         assert os.path.exists(os.path.join(root, d, "_written_once")), d
+
+
+def test_split_schema_is_read_once_when_written(spark, sf_dir):
+    """A second source over an already written split runs no Spark job:
+    the schema is read back from the split (and the replay-order mtimes
+    stamped) once, when the split is written, not on every call."""
+    first = events_stream_source(spark, sf_dir, n_files=3)
+    sc = spark.sparkContext
+    sc.setJobGroup("bfcms_split_reuse", "second source over one split")
+    try:
+        again = events_stream_source(spark, sf_dir, n_files=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("bfcms_split_reuse")) == []
+    assert again.schema == first.schema
+
+
+class _RecordingWriter:
+    """Stands in for a DataStreamWriter: records the session confs that
+    ``start()`` sees, then raises or returns a marker."""
+
+    def __init__(self, spark, keys, fail=False):
+        self.spark, self.keys, self.fail = spark, keys, fail
+        self.options, self.seen = {}, None
+
+    def option(self, key, value):
+        self.options[key] = value
+        return self
+
+    def start(self):
+        self.seen = {k: self.spark.conf.get(k, None) for k in self.keys}
+        if self.fail:
+            raise RuntimeError("start failed")
+        return "started"
+
+
+def _set_confs(spark, values):
+    for k, v in values.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+def test_start_bounded_restores_caller_confs(spark):
+    """start_bounded sets shuffle.partitions and the checkpoint manager for
+    start() only: afterwards both are what the caller had, unset or set,
+    also when start() raises (a fake and a real writer)."""
+    import pytest
+
+    from bloom_filters_count_min_sketch_spark_streaming_spark.streaming.runner import (
+        _CKPT_MANAGER_CONF,
+        _SHUFFLE_CONF,
+        FS_CHECKPOINT_MANAGER,
+        _ephemeral_ckpt,
+        start_bounded,
+    )
+
+    keys = (_SHUFFLE_CONF, _CKPT_MANAGER_CONF)
+    caller = {k: spark.conf.get(k, None) for k in keys}
+    file_context = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    unset = {k: None for k in keys}
+    set_by_caller = {_SHUFFLE_CONF: "7", _CKPT_MANAGER_CONF: file_context}
+    try:
+        for before in (unset, set_by_caller):
+            _set_confs(spark, before)
+            for fail in (False, True):
+                w = _RecordingWriter(spark, keys, fail)
+                ckpt = _ephemeral_ckpt()
+                if fail:
+                    with pytest.raises(RuntimeError):
+                        start_bounded(spark, w, ckpt, shuffle_partitions=3)
+                else:
+                    assert start_bounded(spark, w, ckpt, shuffle_partitions=3) == "started"
+                assert w.seen == {_SHUFFLE_CONF: "3", _CKPT_MANAGER_CONF: FS_CHECKPOINT_MANAGER}
+                assert w.options == {"checkpointLocation": ckpt}
+                assert {k: spark.conf.get(k, None) for k in keys} == before, (before, fail)
+            rate = spark.readStream.format("rate").load()
+            with pytest.raises(Exception, match="bfcms_no_such_sink"):
+                start_bounded(
+                    spark,
+                    rate.writeStream.format("bfcms_no_such_sink"),
+                    _ephemeral_ckpt(),
+                    shuffle_partitions=3,
+                )
+            assert {k: spark.conf.get(k, None) for k in keys} == before, before
+    finally:
+        _set_confs(spark, caller)
+
+
+def test_start_bounded_keeps_default_manager_off_owned_local_ckpts(spark, tmp_path):
+    """Only a local checkpoint dir this process made (_ephemeral_ckpt,
+    tmp_snapshot_dir) gets the FileSystem-based manager; a remote, durable
+    or caller-owned one keeps Spark's default (the conf stays unset)."""
+    from bloom_filters_count_min_sketch_spark_streaming_spark.streaming.runner import (
+        _CKPT_MANAGER_CONF,
+        FS_CHECKPOINT_MANAGER,
+        _ephemeral_ckpt,
+        start_bounded,
+    )
+
+    assert spark.conf.get(_CKPT_MANAGER_CONF, None) is None
+    owned = _ephemeral_ckpt()
+    cases = {
+        owned: FS_CHECKPOINT_MANAGER,
+        "file://" + owned: FS_CHECKPOINT_MANAGER,
+        "s3a://bucket/ckpt" + owned: None,
+        "hdfs://namenode:8020" + owned: None,
+        str(tmp_path): None,
+    }
+    for ckpt, want in cases.items():
+        w = _RecordingWriter(spark, (_CKPT_MANAGER_CONF,))
+        start_bounded(spark, w, ckpt)
+        assert w.seen == {_CKPT_MANAGER_CONF: want}, ckpt
+        assert spark.conf.get(_CKPT_MANAGER_CONF, None) is None
+
+
+def test_bounded_run_rows_match_default_checkpoint_manager(spark, sf_dir, tmp_path, monkeypatch):
+    """A stateful bounded run checkpointed through the FileSystem-based
+    manager (an _ephemeral_ckpt dir) emits the same rows as the same run on
+    Spark's default manager (a dir the caller owns), and its checkpoint
+    reads back the same through the default manager."""
+    from bloom_filters_count_min_sketch_spark_streaming_spark.streaming import runner, stateful
+
+    ckpts = []
+
+    def run(make_ckpt):
+        def ckpt():
+            ckpts.append(make_ckpt())
+            return ckpts[-1]
+
+        monkeypatch.setattr(runner, "_ephemeral_ckpt", ckpt)
+        running = stateful.running_counts(events_stream_source(spark, sf_dir), "user_id")
+        rows = sorted(tuple(r) for r in run_available_now(running, "append").collect())
+        return rows, spark.read.format("state-metadata").load(ckpts[-1]).collect()
+
+    owned = run(runner._ephemeral_ckpt)
+    default = run(lambda: str(tmp_path / "ckpt"))
+    assert owned[0] and owned == default
